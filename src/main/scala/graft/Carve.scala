@@ -3,9 +3,10 @@ package graft
 import graft.carve.ConfigLoader
 import graft.evidence.EvidenceOpen
 import graft.pipeline.{CarvePipeline, Checkpoint, ProgressListener}
+import graft.sinks.MetadataSinks.Stream
 import graft.sinks.{MetadataSinks, RunInfo}
 import graft.sqlite.SqliteArtefacts
-import org.apache.spark.sql.SparkSession
+import org.apache.spark.sql.{DataFrame, SparkSession}
 
 /** End-to-end carve run — the reference binary's main path, Spark-shaped:
   * load the engine config (YAML file or embedded default, sha256
@@ -163,29 +164,24 @@ object Carve {
             s"files_carved=${s.filesCarved} artefacts_extracted=${s.artefactsExtracted}")
       } else {
         val info = RunInfo(runId, ToolVersion, loaded.configHash, image, evidenceSha)
-        MetadataSinks.writeAll(spark, outDir, backend,
-          carvedOut, result.artefacts, result.entropyRegions, info)
-        val history = MetadataSinks.browserHistoryDf(spark,
-          SqliteArtefacts.history(spark, ref, carvedOut, runId,
-            pageRecovery = cfg.sqlitePageRecovery), info)
-        val cookies = MetadataSinks.browserCookiesDf(spark,
-          SqliteArtefacts.cookies(spark, ref, carvedOut, runId), info)
-        val downloads = MetadataSinks.browserDownloadsDf(spark,
-          SqliteArtefacts.downloads(spark, ref, carvedOut, runId), info)
-        val summary = MetadataSinks.runSummaryDf(spark,
-          Seq(CarvePipeline.summarize(spark, runId, result.copy(carvedFiles = carvedOut))).toDS(), info)
-        backend match {
-          case "parquet" =>
-            history.write.mode("overwrite").parquet(s"$outDir/browser_history")
-            cookies.write.mode("overwrite").parquet(s"$outDir/browser_cookies")
-            downloads.write.mode("overwrite").parquet(s"$outDir/browser_downloads")
-            summary.write.mode("overwrite").parquet(s"$outDir/run_summary")
-          case _ =>
-            history.write.mode("overwrite").json(s"$outDir/browser_history")
-            cookies.write.mode("overwrite").json(s"$outDir/browser_cookies")
-            downloads.write.mode("overwrite").json(s"$outDir/browser_downloads")
-            summary.write.mode("overwrite").json(s"$outDir/run_summary")
-        }
+        // browser streams and the run summary are json for either line
+        // backend; each browser stream is one part file
+        val fmt = if (backend == "parquet") "parquet" else "json"
+        def browser(dir: String, df: => DataFrame) = Stream(dir, fmt, () =>
+          df.repartition(1).sortWithinPartitions("source_file"))
+        MetadataSinks.write(spark, outDir, carvedOut,
+          MetadataSinks.carveStreams(spark, backend, carvedOut, result.artefacts,
+            result.entropyRegions, info) ++ Seq(
+            browser("browser_history", MetadataSinks.browserHistoryDf(spark,
+              SqliteArtefacts.history(spark, ref, carvedOut, runId,
+                pageRecovery = cfg.sqlitePageRecovery), info)),
+            browser("browser_cookies", MetadataSinks.browserCookiesDf(spark,
+              SqliteArtefacts.cookies(spark, ref, carvedOut, runId), info)),
+            browser("browser_downloads", MetadataSinks.browserDownloadsDf(spark,
+              SqliteArtefacts.downloads(spark, ref, carvedOut, runId), info)),
+            Stream("run_summary", fmt, () => MetadataSinks.runSummaryDf(spark,
+              Seq(CarvePipeline.summarize(spark, runId, result.copy(carvedFiles = carvedOut))).toDS(),
+              info))))
       }
 
       // Early-stop checkpoint (reference pipeline/mod.rs:506-521): when a

@@ -3,6 +3,8 @@ package graft
 import graft.carve.ConfigLoader
 import graft.evidence.EvidenceOpen
 import graft.pipeline.CarvePipeline
+import graft.sinks.MetadataSinks
+import graft.sinks.MetadataSinks.Stream
 import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.functions._
 
@@ -38,16 +40,16 @@ object CarveFleet {
       val refs = images.map(p => new java.io.File(p).getName -> EvidenceOpen.ref(p))
       val fleet = CarvePipeline.runMany(spark, refs, loaded.config, runId,
         payloadDir = Some(s"$outDir/carved"))
-      fleet.carvedFiles.write.mode("overwrite")
-        .partitionBy("evidence_id").parquet(s"$outDir/files")
-      fleet.artefacts.write.mode("overwrite")
-        .partitionBy("evidence_id").parquet(s"$outDir/artefacts")
-      fleet.entropyRegions.write.mode("overwrite")
-        .partitionBy("evidence_id").parquet(s"$outDir/entropy_regions")
-      // after the table writes above the scan/carve counters are final;
-      // summaries() is two jobs total regardless of fleet size
-      fleet.summaries(spark)
-        .coalesce(1).write.mode("overwrite").parquet(s"$outDir/run_summary")
+      // files/ gets one part per image directory however the carve was
+      // spread; the summary reads the carve's counters, so its frame is
+      // built on its sink thread, after the carve is materialized
+      MetadataSinks.write(spark, outDir, fleet.carvedFiles, Seq(
+        Stream("files", "parquet", () => fleet.carvedFiles.repartition(col("evidence_id")),
+          partitionBy = Seq("evidence_id")),
+        Stream("artefacts", "parquet", () => fleet.artefacts, partitionBy = Seq("evidence_id")),
+        Stream("entropy_regions", "parquet", () => fleet.entropyRegions,
+          partitionBy = Seq("evidence_id")),
+        Stream("run_summary", "parquet", () => fleet.summaries(spark).coalesce(1))))
       fleet.release()
     } finally if (stopSession) spark.stop()
   }

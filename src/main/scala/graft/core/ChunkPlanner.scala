@@ -10,7 +10,9 @@ import org.apache.spark.sql.{Dataset, SparkSession}
   * Scale note: the plan itself is tiny (100 TB / 512 MiB = ~200k rows), so
   * it is generated distributed via `spark.range` — one row per chunk, no
   * driver-side materialization — and becomes the leaf relation of the scan
-  * DAG. Partition count of downstream stages == chunk count.
+  * DAG, sliced over the default parallelism: the scan stage has one task
+  * per chunk up to the core count, and the carve stage re-spreads its hits
+  * over every core (CarvePipeline).
   */
 object ChunkPlanner {
 
@@ -37,7 +39,10 @@ object ChunkPlanner {
     if (chunkSize <= 0 || totalLen <= 0) spark.emptyDataset[ScanChunk]
     else {
       val n = (totalLen + chunkSize - 1) / chunkSize
-      spark.range(n).map { i =>
+      // no more slices than chunks: an empty scan task would still write
+      // an empty part file into every scan-derived stream
+      val slices = math.min(n, spark.sparkContext.defaultParallelism.toLong).toInt
+      spark.range(0, n, 1, slices).map { i =>
         val start = i * chunkSize
         val remaining = totalLen - start
         ScanChunk(i, start, math.min(remaining, chunkSize + overlap), math.min(remaining, chunkSize))

@@ -16,8 +16,8 @@ import org.apache.spark.storage.StorageLevel
   * chunks (driver-planned, one row per chunk)
   *   .mapPartitions(read + scan signatures/strings/entropy)   // stage 1, narrow, fused
   *   hits.filter(localOffset < validLength)                   // exactly-once under overlap
-  *   hits.mapPartitions(carve)                                // stage 2, narrow, ranged evidence reads
-  *   artefact/entropy/summary aggregations                    // only shuffles in the job
+  *   hits.repartition(cores, offset).mapPartitions(carve)     // stage 2, ranged evidence reads
+  *   artefact/entropy/summary aggregations
   * }}}
   *
   * Scale design: the scan stage's output (hits/spans/regions) is tiny
@@ -25,9 +25,13 @@ import org.apache.spark.storage.StorageLevel
   * evidence is read exactly once; the carve stage re-opens the evidence
   * per task for random access (carved files cross chunk boundaries, so
   * carving CANNOT be served from the chunk's own bytes — SURVEY §7.4).
-  * Every stage is narrow; parallelism == chunk count. The reference's
-  * worker threads + bounded channels map to task scheduling; its
-  * single-writer metadata thread maps to DataFrameWriter.
+  * Stage 1 spreads the chunks over the default parallelism (the plan is a
+  * `spark.range`), so an image of fewer chunks than cores scans on fewer
+  * cores; stage 2 hash-spreads the hits over the default parallelism, so
+  * even a one-chunk image carves on every core. The reference's worker
+  * threads + bounded channels map to task scheduling; its single-writer
+  * metadata thread maps to MetadataSinks.write, which writes every
+  * stream concurrently.
   */
 object CarvePipeline {
 
@@ -198,47 +202,55 @@ object CarvePipeline {
     // pipeline/mod.rs:256-264) rather than silently dropped; an
     // accumulator is Spark's counterpart of that shared counter.
     val carveErrors = spark.sparkContext.longAccumulator(s"graft_carve_errors_$runId")
+    // The hits are spread over every core whatever the chunk count (the
+    // reference feeds num_cpus carve workers from one hit channel). Hash
+    // on the offset, not round-robin: hits at one offset may name the same
+    // payload path, so they stay in one task. Offset order within a task
+    // keeps its ranged reads moving forward through the evidence.
     val hitRows = scanned.flatMap(_.hits)
-    var carved = hitRows.mapPartitions { iter =>
-      val reader = evidenceRef.open()
-      // Optional payload store: carved bytes land at payloadDir/relPath.
-      // Deterministic {type}_{offset:012X} names make task retries and
-      // speculative attempts idempotent (same bytes, same path).
-      val writer = payloadDir.map(new PayloadWriter(_))
-      closeOnTaskEnd { writer.foreach(_.close()); reader.close() }
-      val ctx = ExtractionContext(runId, reader, writer.map(w => w.sink _))
-      iter.flatMap { h =>
-        val (patId, ftId) = patternIdOf(h.fileTypeId)
-        registry.get(ftId).flatMap { handler =>
-          try {
-            val result = handler.processHit(CarveHit(h.globalOffset, ftId, patId), ctx)
-            // classifying containers (zip→docx, ole→doc, ...) report a
-            // different type than they streamed under — mirror the
-            // reference's post-carve rename (zip.rs:128-141)
-            for (dir <- payloadDir; c <- result) {
-              val streamedPath = Naming.relPath(handler.fileType, handler.extension, c.globalStart)
-              if (c.path != streamedPath) {
-                writer.foreach(_.close())
-                val from = java.nio.file.Paths.get(dir, streamedPath)
-                val to = java.nio.file.Paths.get(dir, c.path)
-                if (java.nio.file.Files.exists(from)) {
-                  java.nio.file.Files.createDirectories(to.getParent)
-                  java.nio.file.Files.move(from, to,
-                    java.nio.file.StandardCopyOption.REPLACE_EXISTING)
-                }
-              }
-            }
-            result
-          } catch { case _: Exception => carveErrors.add(1L); None }
+      .repartition(spark.sparkContext.defaultParallelism, $"globalOffset")
+      .sortWithinPartitions($"globalOffset")
+    // a function value, not a local def: a lifted local method would make
+    // the task closures capture this (non-serializable) object
+    val carveHits: Option[String] => Iterator[NormalizedHit] => Iterator[(NormalizedHit, CarvedFile)] =
+      payloads => iter => {
+        val reader = evidenceRef.open()
+        // Optional payload store: carved bytes land at payloads/relPath.
+        // Deterministic {type}_{offset:012X} names make task retries and
+        // speculative attempts idempotent (same bytes, same path).
+        val writer = payloads.map(new PayloadWriter(_))
+        closeOnTaskEnd { writer.foreach(_.close()); reader.close() }
+        val ctx = ExtractionContext(runId, reader, writer.map(w => w.sink _))
+        iter.flatMap { h =>
+          val (patId, ftId) = patternIdOf(h.fileTypeId)
+          registry.get(ftId).flatMap { handler =>
+            try {
+              val result = handler.processHit(CarveHit(h.globalOffset, ftId, patId), ctx)
+              // classifying containers (zip→docx, ole→doc, ...) report a
+              // different type than they streamed under — mirror the
+              // reference's post-carve rename (zip.rs:128-141)
+              for (w <- writer; c <- result)
+                w.rename(Naming.relPath(handler.fileType, handler.extension, c.globalStart), c.path)
+              result.map(h -> _)
+            } catch { case _: Exception => carveErrors.add(1L); None }
+          }
         }
       }
-    }
-    cfg.maxFiles.foreach(n => carved = carved.limit(n.toInt))
     // persist: the carve table feeds multiple actions (output write,
     // summaries, caller counts) — re-running it would double-fire the
     // carveErrors accumulator and redo payload writes/renames. Rows are
     // metadata only (no payload bytes), so the cache is small.
-    carved = carved.persist(StorageLevel.MEMORY_AND_DISK)
+    val carved = (cfg.maxFiles match {
+      case None => hitRows.mapPartitions(carveHits(payloadDir)(_).map(_._2))
+      case Some(n) =>
+        // --max-files keeps the n lowest-offset carves, the reference's
+        // offset order, on any partitioning: carve without payloads,
+        // choose, then carve the chosen hits again with their payloads.
+        val chosen = hitRows.mapPartitions(carveHits(None))
+          .orderBy($"_2.globalStart", $"_2.path", $"_1.patternId").limit(n.toInt)
+        if (payloadDir.isEmpty) chosen.map(_._2)
+        else chosen.map(_._1).mapPartitions(carveHits(payloadDir)(_).map(_._2))
+    }).persist(StorageLevel.MEMORY_AND_DISK)
 
     val artefactRows = scanned.flatMap(_.artefacts)
     val regionRows = scanned.flatMap(_.regions)

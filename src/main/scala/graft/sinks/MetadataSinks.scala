@@ -2,6 +2,8 @@ package graft.sinks
 
 import graft.artefacts.Artefacts
 import graft.core._
+import java.util.concurrent.atomic.{AtomicBoolean, AtomicInteger}
+import java.util.concurrent.{ExecutionException, ExecutorCompletionService, Executors, TimeUnit}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.{Column, DataFrame, Dataset, SparkSession}
 
@@ -15,8 +17,9 @@ import org.apache.spark.sql.{Column, DataFrame, Dataset, SparkSession}
   * (constant "string_span"/"strings_artefacts"/1.0,
   * parquet.rs:1590-1633); history adds the nullable row_id/table_name
   * pair. The reference's `files_<type>.parquet` category switch becomes
-  * `partitionBy("file_type")` — same physical layout, handled by the
-  * parallel-safe DataFrameWriter instead of a single writer thread.
+  * `partitionBy("file_type")` — same physical layout. Its single
+  * metadata writer thread becomes [[MetadataSinks.write]]: every stream
+  * of a run written concurrently from a fixed driver pool.
   */
 final case class RunInfo(
     runId: String,
@@ -170,10 +173,52 @@ object MetadataSinks {
         col("stringSpans").as("string_spans"),
         col("artefactsExtracted").as("artefacts_extracted")): _*)
 
-  /** Write all streams to `outDir` in the chosen backend. Parquet gets
-    * the per-type category layout via partitionBy; jsonl/csv are single
-    * logical tables like the reference's line-oriented sinks.
+  /** One metadata stream: its directory under the output root, the
+    * DataFrameWriter format, the columns it is partitioned into
+    * directories by, and its frame. The frame is built on the stream's
+    * sink thread, so any job it needs to plan (the run summary's
+    * counters) runs concurrently with the other streams.
     */
+  final case class Stream(dir: String, format: String, frame: () => DataFrame,
+                          partitionBy: Seq[String] = Nil)
+
+  /** The five scan/carve streams in `backend`'s layout. Parquet `files`
+    * takes the reference's per-type category layout: one
+    * `file_type=<type>` directory holding one part file per type. In
+    * jsonl/csv it is one single-part `carved_files` table, like the
+    * reference's line-oriented sinks. Both keep offset order within a
+    * part. The artefact and entropy streams keep the scan's
+    * partitioning.
+    */
+  def carveStreams(
+      spark: SparkSession,
+      backend: String, // parquet | jsonl | csv
+      carved: Dataset[CarvedFile],
+      artefacts: Dataset[StringArtefact],
+      entropy: Dataset[EntropyRegion],
+      info: RunInfo): Seq[Stream] = {
+    val fmt = backend match {
+      case "parquet" => "parquet"
+      case "jsonl" => "json"
+      case "csv" => "csv"
+      case other => throw new IllegalArgumentException(s"unknown backend $other")
+    }
+    val files =
+      if (fmt == "parquet")
+        Stream("files", fmt, () => carvedFilesDf(spark, carved, info)
+          .repartition(col("file_type")).sortWithinPartitions("file_type", "global_start"),
+          partitionBy = Seq("file_type"))
+      else
+        Stream("carved_files", fmt, () => carvedFilesDf(spark, carved, info)
+          .coalesce(1).sortWithinPartitions("global_start"))
+    Seq(files,
+      Stream("artefacts_urls", fmt, () => urlArtefactsDf(spark, artefacts, info)),
+      Stream("artefacts_emails", fmt, () => emailArtefactsDf(spark, artefacts, info)),
+      Stream("artefacts_phones", fmt, () => phoneArtefactsDf(spark, artefacts, info)),
+      Stream("entropy_regions", fmt, () => entropyRegionsDf(spark, entropy, info)))
+  }
+
+  /** Write the five scan/carve streams to `outDir` in the chosen backend. */
   def writeAll(
       spark: SparkSession,
       outDir: String,
@@ -181,35 +226,67 @@ object MetadataSinks {
       carved: Dataset[CarvedFile],
       artefacts: Dataset[StringArtefact],
       entropy: Dataset[EntropyRegion],
-      info: RunInfo): Unit = {
-    val files = carvedFilesDf(spark, carved, info)
-    val urls = urlArtefactsDf(spark, artefacts, info)
-    val emails = emailArtefactsDf(spark, artefacts, info)
-    val phones = phoneArtefactsDf(spark, artefacts, info)
-    val regions = entropyRegionsDf(spark, entropy, info)
+      info: RunInfo): Unit =
+    write(spark, outDir, carved, carveStreams(spark, backend, carved, artefacts, entropy, info))
 
-    backend match {
-      case "parquet" =>
-        files.write.mode("overwrite").partitionBy("file_type").parquet(s"$outDir/files")
-        urls.write.mode("overwrite").parquet(s"$outDir/artefacts_urls")
-        emails.write.mode("overwrite").parquet(s"$outDir/artefacts_emails")
-        phones.write.mode("overwrite").parquet(s"$outDir/artefacts_phones")
-        regions.write.mode("overwrite").parquet(s"$outDir/entropy_regions")
-      case "jsonl" =>
-        files.write.mode("overwrite").json(s"$outDir/carved_files")
-        urls.write.mode("overwrite").json(s"$outDir/artefacts_urls")
-        emails.write.mode("overwrite").json(s"$outDir/artefacts_emails")
-        phones.write.mode("overwrite").json(s"$outDir/artefacts_phones")
-        regions.write.mode("overwrite").json(s"$outDir/entropy_regions")
-      case "csv" =>
-        def csv(df: DataFrame, path: String): Unit =
-          df.write.mode("overwrite").option("header", "true").csv(path)
-        csv(files, s"$outDir/carved_files")
-        csv(urls, s"$outDir/artefacts_urls")
-        csv(emails, s"$outDir/artefacts_emails")
-        csv(phones, s"$outDir/artefacts_phones")
-        csv(regions, s"$outDir/entropy_regions")
-      case other => throw new IllegalArgumentException(s"unknown backend $other")
+  /** Write `streams` under `outDir`, all at once: the metadata writer of
+    * the reference is one thread beside the carve workers, and a sink
+    * pass is mostly driver-side planning, commit and file work that
+    * leaves the cores idle when the streams take turns.
+    *
+    * `carved`, the persisted carve every carve-derived stream reads, is
+    * materialized first, so its payload writes and its
+    * `graft_carve_errors_*` accumulator fire once, not once per stream.
+    * Each stream then runs on a thread of a fixed pool; the call returns
+    * when all are done. The first failure cancels the other streams' jobs
+    * and is rethrown once every thread has finished.
+    *
+    * Every write goes through [[InProcessChmodFileSystem]], and each
+    * overwrites its directory.
+    */
+  def write(spark: SparkSession, outDir: String, carved: Dataset[_], streams: Seq[Stream]): Unit = {
+    carved.count()
+    val sc = spark.sparkContext
+    val tag = s"graft-sinks-${java.util.UUID.randomUUID()}"
+    val cancelled = new AtomicBoolean(false)
+    val threads = new AtomicInteger(0)
+    val pool = Executors.newFixedThreadPool(math.max(1, streams.size), { r: Runnable =>
+      val t = new Thread(r, s"graft-sink-${threads.incrementAndGet()}")
+      t.setDaemon(true)
+      t
+    })
+    try {
+      val done = new ExecutorCompletionService[Unit](pool)
+      streams.foreach { s =>
+        done.submit { () =>
+          if (!cancelled.get()) {
+            sc.addJobTag(tag)
+            try writeStream(outDir, s) finally sc.removeJobTag(tag)
+          }
+        }
+      }
+      var first: Option[Throwable] = None
+      streams.foreach { _ =>
+        try done.take().get()
+        catch {
+          case e: ExecutionException if first.isEmpty =>
+            first = Some(e.getCause)
+            cancelled.set(true)
+            sc.cancelJobsWithTag(tag)
+          case _: ExecutionException => // later failures: the first is rethrown
+        }
+      }
+      first.foreach(e => throw e)
+    } finally {
+      pool.shutdown()
+      pool.awaitTermination(1, TimeUnit.MINUTES)
     }
+  }
+
+  private def writeStream(outDir: String, s: Stream): Unit = {
+    var w = s.frame().write.mode("overwrite").format(s.format).options(InProcessChmodFileSystem.options)
+    if (s.partitionBy.nonEmpty) w = w.partitionBy(s.partitionBy: _*)
+    if (s.format == "csv") w = w.option("header", "true")
+    w.save(s"$outDir/${s.dir}")
   }
 }
