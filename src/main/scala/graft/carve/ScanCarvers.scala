@@ -38,13 +38,7 @@ object Scan {
   /** Read up to `len` bytes (shorter at EOF) — reference read_prefix. */
   def readPrefix(ctx: ExtractionContext, offset: Long, len: Int): Array[Byte] = {
     val buf = new Array[Byte](len)
-    var got = 0
-    var done = false
-    while (!done && got < len) {
-      val n = ctx.evidence.readAt(offset + got, buf, got, len - got)
-      if (n == 0) done = true else got += n
-    }
-    java.util.Arrays.copyOf(buf, got)
+    java.util.Arrays.copyOf(buf, ctx.evidence.readFully(offset, buf, 0, len))
   }
 
   /** Hash-and-finish helper shared by the scan carvers: ranged copy of the

@@ -16,37 +16,43 @@ import org.apache.spark.sql.{Dataset, SparkSession}
   */
 object ChunkPlanner {
 
-  /** Pure planning rule, used by both the Dataset path and tests. */
-  def planLocal(totalLen: Long, chunkSize: Long, overlap: Long): Seq[ScanChunk] = {
-    if (chunkSize <= 0 || totalLen <= 0) Seq.empty
-    else {
-      val n = (totalLen + chunkSize - 1) / chunkSize
-      (0L until n).map { i =>
-        val start = i * chunkSize
-        val remaining = totalLen - start
-        ScanChunk(
-          id = i,
-          start = start,
-          length = math.min(remaining, chunkSize + overlap),
-          validLength = math.min(remaining, chunkSize))
-      }
-    }
+  /** Longest chunk read (chunk + overlap) one JVM byte array can hold:
+    * HotSpot refuses arrays within a few words of Int.MaxValue.
+    */
+  val MaxChunkBytes: Long = Int.MaxValue - 8L
+
+  /** Chunk count for the geometry — the one place it is validated, so a
+    * chunk + overlap that no byte array can hold fails at planning
+    * instead of wrapping `length.toInt` negative in the scan.
+    */
+  private def count(totalLen: Long, chunkSize: Long, overlap: Long): Long = {
+    require(overlap >= 0 && chunkSize <= MaxChunkBytes - overlap,
+      s"chunk size $chunkSize + overlap $overlap: overlap must be >= 0 and " +
+        s"their sum fit one JVM byte array ($MaxChunkBytes bytes)")
+    if (chunkSize <= 0 || totalLen <= 0) 0L else (totalLen + chunkSize - 1) / chunkSize
   }
+
+  /** Chunk i of the plan. */
+  private def chunk(i: Long, totalLen: Long, chunkSize: Long, overlap: Long): ScanChunk = {
+    val start = i * chunkSize
+    val remaining = totalLen - start
+    ScanChunk(i, start, math.min(remaining, chunkSize + overlap), math.min(remaining, chunkSize))
+  }
+
+  /** Pure planning rule, used by the DSv2 source and tests. */
+  def planLocal(totalLen: Long, chunkSize: Long, overlap: Long): Seq[ScanChunk] =
+    (0L until count(totalLen, chunkSize, overlap)).map(chunk(_, totalLen, chunkSize, overlap))
 
   /** Distributed chunk plan as a Dataset — the scan relation. */
   def plan(spark: SparkSession, totalLen: Long, chunkSize: Long, overlap: Long): Dataset[ScanChunk] = {
     import spark.implicits._
-    if (chunkSize <= 0 || totalLen <= 0) spark.emptyDataset[ScanChunk]
+    val n = count(totalLen, chunkSize, overlap)
+    if (n == 0) spark.emptyDataset[ScanChunk]
     else {
-      val n = (totalLen + chunkSize - 1) / chunkSize
       // no more slices than chunks: an empty scan task would still write
       // an empty part file into every scan-derived stream
       val slices = math.min(n, spark.sparkContext.defaultParallelism.toLong).toInt
-      spark.range(0, n, 1, slices).map { i =>
-        val start = i * chunkSize
-        val remaining = totalLen - start
-        ScanChunk(i, start, math.min(remaining, chunkSize + overlap), math.min(remaining, chunkSize))
-      }
+      spark.range(0, n, 1, slices).map(i => chunk(i, totalLen, chunkSize, overlap))
     }
   }
 }

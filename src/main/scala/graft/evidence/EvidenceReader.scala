@@ -23,17 +23,22 @@ trait EvidenceReader extends Closeable {
 
   def readAt(offset: Long, buf: Array[Byte]): Int = readAt(offset, buf, 0, buf.length)
 
-  /** Convenience: exactly-`len` read or None (reference read_exact_at). */
-  def readExactAt(offset: Long, len: Int): Option[Array[Byte]] = {
-    val buf = new Array[Byte](len)
+  /** Read into buf[off..) until `len` bytes or EOF; returns the count,
+    * short only at EOF. The one read-until-EOF loop over `readAt`.
+    */
+  def readFully(offset: Long, buf: Array[Byte], off: Int, len: Int): Int = {
     var got = 0
-    while (got < len) {
-      val n = readAt(offset + got, buf, got, len - got)
-      if (n == 0) return None
+    var n = 1
+    while (got < len && n > 0) {
+      n = readAt(offset + got, buf, off + got, len - got)
       got += n
     }
-    Some(buf)
+    got
   }
+
+  /** Convenience: exactly-`len` read or None (reference read_exact_at). */
+  def readExactAt(offset: Long, len: Int): Option[Array[Byte]] =
+    Some(new Array[Byte](len)).filter(buf => readFully(offset, buf, 0, len) == len)
 
   override def close(): Unit = ()
 }

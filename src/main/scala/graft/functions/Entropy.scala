@@ -36,21 +36,30 @@ object Entropy {
 
   def shannon(data: Array[Byte]): Double = shannon(data, 0, data.length)
 
-  /** Windowed detection with local merge, offsets rebased by chunkStart.
-    * Windows step by windowSize; a trailing partial window is skipped.
+  def detectRegions(
+      chunkStart: Long,
+      data: Array[Byte],
+      windowSize: Int,
+      threshold: Double): Seq[(Long, Long, Double)] =
+    detectRegions(chunkStart, data, windowSize, threshold, data.length)
+
+  /** Windowed detection over data[0, until) with local merge, offsets
+    * rebased by chunkStart. Windows step by windowSize; a trailing
+    * partial window is skipped.
     */
   def detectRegions(
       chunkStart: Long,
       data: Array[Byte],
       windowSize: Int,
-      threshold: Double): Seq[(Long, Long, Double)] = {
-    if (windowSize <= 0 || data.length < windowSize) return Seq.empty
+      threshold: Double,
+      until: Int): Seq[(Long, Long, Double)] = {
+    if (windowSize <= 0 || until < windowSize) return Seq.empty
     val regions = ArrayBuffer.empty[(Long, Long, Double)]
     var curStart = -1L
     var curEnd = 0L
     var curMax = 0.0
     var idx = 0
-    while (idx + windowSize <= data.length) {
+    while (idx + windowSize <= until) {
       val e = shannon(data, idx, idx + windowSize)
       if (e >= threshold) {
         val winStart = chunkStart + idx

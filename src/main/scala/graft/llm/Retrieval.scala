@@ -47,7 +47,7 @@ object Retrieval extends PersistedIndex {
                k: Int = 5): DataFrame = {
     require(nQueries > 0 && termsPerQuery > 0 && k > 0,
       "nQueries, termsPerQuery and k must be positive")
-    val (tf, dl, stats, termDf) = tokenIndex(df, idCol, textCol)
+    val (tf, _, stats, termDf) = tokenIndex(df, idCol, textCol)
     // Probe queries: the nQueries*termsPerQuery highest-df terms,
     // chunked in rank order. orderBy+limit is a distributed top-k
     // (TakeOrderedAndProject); the row_number window then runs on a
@@ -62,7 +62,7 @@ object Retrieval extends PersistedIndex {
           .cast("long"))
     val queries = ranked.select(col("tok"), col("df_t"),
       expr(s"(rk - 1) DIV $termsPerQuery").as("qid"))
-    scoreQueries(tf, dl, stats, queries, k)
+    scoreQueries(tf, stats, queries, k)
   }
 
   /** BM25 top-k for CALLER-SUPPLIED queries: `queryTerms` is a
@@ -75,8 +75,8 @@ object Retrieval extends PersistedIndex {
   def bm25TopKFor(df: DataFrame, idCol: String, textCol: String,
                   queryTerms: DataFrame, k: Int = 5): DataFrame = {
     require(k > 0, "k must be positive")
-    val (tf, dl, stats, termDf) = tokenIndex(df, idCol, textCol)
-    scoreQueries(tf, dl, stats, resolveTerms(queryTerms, termDf), k)
+    val (tf, _, stats, termDf) = tokenIndex(df, idCol, textCol)
+    scoreQueries(tf, stats, resolveTerms(queryTerms, termDf), k)
   }
 
   /** Two-stage retrieval with pseudo-relevance feedback (Rocchio):
@@ -318,8 +318,8 @@ object Retrieval extends PersistedIndex {
                          srcCol: String, queryTerms: DataFrame, k: Int,
                          maxPerSource: Int): DataFrame = {
     require(k > 0 && maxPerSource > 0, "k and maxPerSource must be positive")
-    val (tf, dl, stats, termDf) = tokenIndex(df, idCol, textCol)
-    val scored = scoreAll(tf, dl, stats, resolveTerms(queryTerms, termDf))
+    val (tf, _, stats, termDf) = tokenIndex(df, idCol, textCol)
+    val scored = scoreAll(tf, stats, resolveTerms(queryTerms, termDf))
       .join(df.select(col(idCol).as("id"), col(srcCol).as("source")), Seq("id"))
     val perSrc = scored.withColumn("src_rnk",
         row_number().over(Window.partitionBy(col("qid"), col("source"))
@@ -338,9 +338,9 @@ object Retrieval extends PersistedIndex {
     * 1e4) over a bounded (tok, df_t, qid) query frame (broadcast), then
     * the per-query top-k window.
     */
-  private def scoreQueries(tf: DataFrame, dl: DataFrame, stats: DataFrame,
+  private def scoreQueries(tf: DataFrame, stats: DataFrame,
                            queries: DataFrame, k: Int): DataFrame =
-    rankTopK(scoreAll(tf, dl, stats, queries), k)
+    rankTopK(scoreAll(tf, stats, queries), k)
 
   /** Per-query top-k window over the scored (qid, id, …) frame. */
   private def rankTopK(scored: DataFrame, k: Int): DataFrame =
@@ -355,7 +355,7 @@ object Retrieval extends PersistedIndex {
     * on the postings frame ([[tokenIndex]] denormalizes it in-row), so
     * the only corpus-sized move is the matched-postings groupBy.
     */
-  private def scoreAll(tf: DataFrame, dl: DataFrame, stats: DataFrame,
+  private def scoreAll(tf: DataFrame, stats: DataFrame,
                        queries: DataFrame): DataFrame =
     scorePostings(tf.join(broadcast(queries), Seq("tok")), stats)
 

@@ -45,11 +45,13 @@ private[llm] object TokenRuns {
   /** Append per-row (tokName, tfName) columns by exploding `ws`'s run
     * counts — one output row per DISTINCT token of the row, count in
     * tfName. Rows whose `ws` is empty or NULL produce no output (the
-    * explode-of-empty semantics the grouped form had).
+    * explode-of-empty semantics the grouped form had). NULL is folded to
+    * the empty array first: with ANSI off `size(NULL)` is -1, not NULL,
+    * and would otherwise walk a descending run sequence.
     */
   def explodeCounts(df: DataFrame, ws: Column, tokName: String,
                     tfName: String): DataFrame =
-    df.withColumn("graft_s_trc", explode(array(array_sort(ws))))
+    df.withColumn("graft_s_trc", explode(array(array_sort(coalesce(ws, array())))))
       .withColumn("graft_r_trc", explode(array(expr(startsExpr))))
       .withColumn("graft_kv_trc", explode(expr(pairsExpr)))
       .withColumn(tokName, col("graft_kv_trc.tok"))

@@ -45,6 +45,43 @@ object CarvePipeline {
       artefacts: Seq[StringArtefact],
       regions: Seq[EntropyRegion])
 
+  /** Stage 1 for one chunk — the kernel every scan entry point calls
+    * ([[run]], [[scanChunkTable]], the DSv2 `mode=hits` readers): the
+    * signature hits, string artefacts and entropy regions of
+    * `data[0, got)`, each kept only where the chunk owns it (offset <
+    * validLength). `data` is scanned in place and may be a reused
+    * buffer with stale bytes past `got`; nothing in the result retains
+    * it. A plain serializable value, so task closures capture it and
+    * not [[CarvePipeline]].
+    */
+  final case class ChunkScanner(cfg: EngineConfig, runId: String,
+      enableStrings: Boolean, enableEntropy: Boolean) {
+    val signatures: SignatureScan = SignatureScan(cfg)
+    private val strings = new StringScan(cfg.stringMinLen, cfg.stringMaxLen, cfg.stringScanUtf16)
+
+    /** The signature half: overlap-deduped hits at global offsets. */
+    def hits(chunk: ScanChunk, data: Array[Byte], got: Int): Seq[NormalizedHit] =
+      signatures.normalize(chunk, signatures.scanChunk(chunk, data, got))
+
+    def scan(chunk: ScanChunk, data: Array[Byte], got: Int): ChunkScan = {
+      val artefacts =
+        if (!enableStrings) Seq.empty[StringArtefact]
+        else strings.scanChunk(chunk.id, data, got)
+          .filter(_.localStart < chunk.validLength)
+          .flatMap { sp =>
+            val from = sp.localStart.toInt
+            decodeAndExtract(runId, chunk.start, sp, java.util.Arrays.copyOfRange(data, from, from + sp.length),
+              cfg.enableUrlScan, cfg.enableEmailScan, cfg.enablePhoneScan)
+          }
+      val regions =
+        if (!enableEntropy) Seq.empty[EntropyRegion]
+        else Entropy.toEntropyRegions(runId, cfg.entropyWindowSize,
+          Entropy.detectRegions(chunk.start, data, cfg.entropyWindowSize, cfg.entropyThreshold,
+            math.min(got.toLong, chunk.validLength).toInt))
+      ChunkScan(chunk.id, chunk.start, chunk.validLength, got.toLong, hits(chunk, data, got), artefacts, regions)
+    }
+  }
+
   final case class Result(
       chunks: Dataset[ScanChunk],
       scanned: Dataset[ChunkScan],
@@ -124,14 +161,7 @@ object CarvePipeline {
     }
     cfg.maxChunks.foreach(n => chunks = chunks.limit(n.toInt))
 
-    val scan = SignatureScan(cfg)
-    val stringScan = new StringScan(cfg.stringMinLen, cfg.stringMaxLen, cfg.stringScanUtf16)
-    val entropyWindow = cfg.entropyWindowSize
-    val entropyThreshold = cfg.entropyThreshold
-    val doStrings = enableStrings
-    val doEntropy = enableEntropy
-    val (doUrls, doEmails, doPhones) =
-      (cfg.enableUrlScan, cfg.enableEmailScan, cfg.enablePhoneScan)
+    val scanner = ChunkScanner(cfg, runId, enableStrings, enableEntropy)
 
     // Progress: per-chunk byte counts land in a named accumulator that
     // ProgressListener folds into %, MiB/s, ETA events (SURVEY step 9).
@@ -145,34 +175,14 @@ object CarvePipeline {
       closeOnTaskEnd(reader.close())
       // one reusable read buffer per task thread: chunks are up to 512 MiB,
       // so per-chunk allocation would churn the old-gen at cluster scale.
-      // Nothing downstream retains `data` — span/entropy inputs are copied.
+      // The scanner reads only data[0, got) and retains none of it.
       var data = Array.emptyByteArray
       iter.map { chunk =>
         val want = chunk.length.toInt
         if (data.length < want) data = new Array[Byte](want)
-        var got = 0
-        var n = 1
-        while (got < want && n > 0) {
-          n = reader.readAt(chunk.start + got, data, got, want - got)
-          got += n
-        }
+        val got = reader.readFully(chunk.start, data, 0, want)
         bytesProgress.add(got.toLong)
-        val hits = scan.normalize(chunk, scan.scanChunk(chunk, data, got))
-        val artefacts =
-          if (doStrings) {
-            stringScan.scanChunk(chunk.id, java.util.Arrays.copyOf(data, got))
-              .filter(sp => sp.localStart < chunk.validLength) // overlap ownership for spans
-              .flatMap { sp =>
-                val spanBytes = java.util.Arrays.copyOfRange(data, sp.localStart.toInt, sp.localStart.toInt + sp.length)
-                decodeAndExtract(runId, chunk.start, sp, spanBytes, doUrls, doEmails, doPhones)
-              }
-          } else Seq.empty[StringArtefact]
-        val regions =
-          if (doEntropy)
-            Entropy.detectRegions(chunk.start, java.util.Arrays.copyOf(data, math.min(got, chunk.validLength.toInt)), entropyWindow, entropyThreshold)
-              .map { case (s, e, m) => EntropyRegion(runId, s, e, m, entropyWindow.toLong) }
-          else Seq.empty[EntropyRegion]
-        ChunkScan(chunk.id, chunk.start, chunk.validLength, got.toLong, hits, artefacts, regions)
+        scanner.scan(chunk, data, got)
       }
     }
 
@@ -194,7 +204,7 @@ object CarvePipeline {
 
     val registry = EngineConfig.buildRegistry(cfg)
     val patternIdOf: Map[Int, (String, String)] =
-      scan.patterns.zipWithIndex.map { case (p, i) => i -> (p.patternId, p.fileTypeId) }.toMap
+      scanner.signatures.patterns.zipWithIndex.map { case (p, i) => i -> (p.patternId, p.fileTypeId) }.toMap
 
     // Stage 2: carve — ranged evidence reads per hit, independent of the
     // chunk partitioning (files larger than a chunk carve correctly).
@@ -397,10 +407,10 @@ object CarvePipeline {
 
   /** "DataFrame scans + pattern matching over Parquet": stage 1 over an
     * ingested evidence-chunk table (graft.Ingest / the DSv2 source)
-    * instead of raw reads — the scan becomes a plain narrow map over a
-    * columnar table with pruning and data locality, while the carve stage
-    * keeps using `evidenceRef` for cross-chunk random access
-    * (SURVEY §7.4 two-level evidence access).
+    * instead of raw reads — the same [[ChunkScanner]] as [[run]], as a
+    * plain narrow map over a columnar table with pruning and data
+    * locality, while the carve stage keeps using `evidenceRef` for
+    * cross-chunk random access (SURVEY §7.4 two-level evidence access).
     *
     * `chunkTable` needs columns (chunk_id, start, valid_length, data).
     */
@@ -412,38 +422,11 @@ object CarvePipeline {
       enableStrings: Boolean = true,
       enableEntropy: Boolean = true): Dataset[ChunkScan] = {
     import spark.implicits._
-    val scan = SignatureScan(cfg)
-    val stringScan = new StringScan(cfg.stringMinLen, cfg.stringMaxLen, cfg.stringScanUtf16)
-    val entropyWindow = cfg.entropyWindowSize
-    val entropyThreshold = cfg.entropyThreshold
-    val doStrings = enableStrings
-    val doEntropy = enableEntropy
-    val (doUrls, doEmails, doPhones) =
-      (cfg.enableUrlScan, cfg.enableEmailScan, cfg.enablePhoneScan)
-    chunkTable
-      .select(org.apache.spark.sql.functions.col("chunk_id"),
-        org.apache.spark.sql.functions.col("start"),
-        org.apache.spark.sql.functions.col("valid_length"),
-        org.apache.spark.sql.functions.col("data"))
+    val scanner = ChunkScanner(cfg, runId, enableStrings, enableEntropy)
+    chunkTable.select("chunk_id", "start", "valid_length", "data")
       .as[(Long, Long, Long, Array[Byte])]
       .map { case (chunkId, start, validLength, data) =>
-        val chunk = ScanChunk(chunkId, start, data.length.toLong, validLength)
-        val hits = scan.normalize(chunk, scan.scanChunk(chunk, data, data.length))
-        val artefacts =
-          if (doStrings)
-            stringScan.scanChunk(chunkId, data)
-              .filter(sp => sp.localStart < validLength)
-              .flatMap { sp =>
-                val spanBytes = java.util.Arrays.copyOfRange(data, sp.localStart.toInt, sp.localStart.toInt + sp.length)
-                decodeAndExtract(runId, start, sp, spanBytes, doUrls, doEmails, doPhones)
-              }
-          else Seq.empty[StringArtefact]
-        val regions =
-          if (doEntropy)
-            Entropy.detectRegions(start, java.util.Arrays.copyOf(data, math.min(data.length.toLong, validLength).toInt), entropyWindow, entropyThreshold)
-              .map { case (s0, e0, m) => EntropyRegion(runId, s0, e0, m, entropyWindow.toLong) }
-          else Seq.empty[EntropyRegion]
-        ChunkScan(chunkId, start, validLength, data.length.toLong, hits, artefacts, regions)
+        scanner.scan(ScanChunk(chunkId, start, data.length.toLong, validLength), data, data.length)
       }
   }
 

@@ -69,15 +69,10 @@ object CarveQueries {
             Option(org.apache.spark.TaskContext.get())
               .foreach(_.addTaskCompletionListener[Unit](_ => r.close()))
             it.map { c =>
-              val want = c.length.toInt
-              val buf = new Array[Byte](want)
-              var got = 0
-              var n = 1
-              while (got < want && n > 0) {
-                n = r.readAt(c.start + got, buf, got, want - got); got += n
-              }
+              val buf = new Array[Byte](c.length.toInt)
+              val got = r.readFully(c.start, buf, 0, buf.length)
               (c.id, c.start, c.validLength,
-                if (got == want) buf else java.util.Arrays.copyOf(buf, got))
+                if (got == buf.length) buf else java.util.Arrays.copyOf(buf, got))
             }
           }.toDF("chunk_id", "start", "valid_length", "data")
         val scan = graft.scan.SignatureScan(cfg)

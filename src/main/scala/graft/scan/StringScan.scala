@@ -21,26 +21,29 @@ final class StringScan(minLen: Int, maxLenIn: Int, scanUtf16: Boolean) extends S
     v == '\t'.toInt || (v >= 0x20 && v <= 0x7e)
   }
 
-  def scanChunk(chunkId: Long, data: Array[Byte]): Seq[StringSpan] = {
+  def scanChunk(chunkId: Long, data: Array[Byte]): Seq[StringSpan] = scanChunk(chunkId, data, data.length)
+
+  /** Spans within data[0, until): bytes past `until` are never read. */
+  def scanChunk(chunkId: Long, data: Array[Byte], until: Int): Seq[StringSpan] = {
     val out = ArrayBuffer.empty[StringSpan]
-    scanAsciiRuns(chunkId, data, out)
-    scanUtf8Runs(chunkId, data, out)
+    scanAsciiRuns(chunkId, data, until, out)
+    scanUtf8Runs(chunkId, data, until, out)
     if (scanUtf16) {
-      scanUtf16Runs(chunkId, data, littleEndian = true, out)
-      scanUtf16Runs(chunkId, data, littleEndian = false, out)
+      scanUtf16Runs(chunkId, data, until, littleEndian = true, out)
+      scanUtf16Runs(chunkId, data, until, littleEndian = false, out)
     }
     out.toSeq
   }
 
-  private def scanAsciiRuns(chunkId: Long, data: Array[Byte], out: ArrayBuffer[StringSpan]): Unit = {
+  private def scanAsciiRuns(chunkId: Long, data: Array[Byte], until: Int, out: ArrayBuffer[StringSpan]): Unit = {
     var i = 0
-    while (i < data.length) {
+    while (i < until) {
       if (!isPrintable(data(i))) i += 1
       else {
         val start = i
         var len = 0
         var break = false
-        while (!break && i < data.length && isPrintable(data(i))) {
+        while (!break && i < until && isPrintable(data(i))) {
           i += 1; len += 1
           if (len >= maxLen) break = true
         }
@@ -50,10 +53,10 @@ final class StringScan(minLen: Int, maxLenIn: Int, scanUtf16: Boolean) extends S
     }
   }
 
-  private def scanUtf8Runs(chunkId: Long, data: Array[Byte], out: ArrayBuffer[StringSpan]): Unit = {
+  private def scanUtf8Runs(chunkId: Long, data: Array[Byte], until: Int, out: ArrayBuffer[StringSpan]): Unit = {
     var i = 0
-    while (i < data.length) {
-      val dec = decodeUtf8At(data, i)
+    while (i < until) {
+      val dec = decodeUtf8At(data, i, until)
       if (dec == -1L) i += 1
       else {
         val ch0 = (dec >>> 8).toInt
@@ -66,8 +69,8 @@ final class StringScan(minLen: Int, maxLenIn: Int, scanUtf16: Boolean) extends S
           var hasMultibyte = false
           var j = i
           var break = false
-          while (!break && j < data.length && chars < maxLen) {
-            val d = decodeUtf8At(data, j)
+          while (!break && j < until && chars < maxLen) {
+            val d = decodeUtf8At(data, j, until)
             if (d == -1L) break = true
             else {
               val ch = (d >>> 8).toInt
@@ -92,12 +95,13 @@ final class StringScan(minLen: Int, maxLenIn: Int, scanUtf16: Boolean) extends S
   private def scanUtf16Runs(
       chunkId: Long,
       data: Array[Byte],
+      until: Int,
       littleEndian: Boolean,
       out: ArrayBuffer[StringSpan]): Unit = {
     var startOffset = 0
     while (startOffset < 2) {
       var i = startOffset
-      while (i + 1 < data.length) {
+      while (i + 1 < until) {
         val pairOk =
           if (littleEndian) isPrintable(data(i)) && data(i + 1) == 0
           else data(i) == 0 && isPrintable(data(i + 1))
@@ -108,7 +112,7 @@ final class StringScan(minLen: Int, maxLenIn: Int, scanUtf16: Boolean) extends S
           val ascii = ArrayBuffer.empty[Byte]
           var j = i
           var break = false
-          while (!break && j + 1 < data.length) {
+          while (!break && j + 1 < until) {
             val ok =
               if (littleEndian) isPrintable(data(j)) && data(j + 1) == 0
               else data(j) == 0 && isPrintable(data(j + 1))
@@ -176,11 +180,10 @@ final class StringScan(minLen: Int, maxLenIn: Int, scanUtf16: Boolean) extends S
     * or -1 on invalid. Rejects overlongs, surrogates, > U+10FFFF — matching
     * the reference decoder exactly.
     */
-  private def decodeUtf8At(data: Array[Byte], idx: Int): Long = {
-    if (idx >= data.length) return -1L
+  private def decodeUtf8At(data: Array[Byte], idx: Int, len: Int): Long = {
+    if (idx >= len) return -1L
     val b0 = data(idx) & 0xff
     if (b0 < 0x80) return (b0.toLong << 8) | 1L
-    val len = data.length
     if (b0 < 0xc2) return -1L
     @inline def cont(b: Int): Boolean = (b & 0xc0) == 0x80
     if (b0 <= 0xdf) {

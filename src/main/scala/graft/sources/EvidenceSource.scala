@@ -1,13 +1,15 @@
 package graft.sources
 
-import graft.core.ChunkPlanner
+import graft.core.{ChunkPlanner, NormalizedHit, ScanChunk}
 import graft.evidence.{EvidenceOpen, EvidenceRef}
+import graft.pipeline.CarvePipeline.ChunkScanner
 import org.apache.spark.sql.catalyst.InternalRow
 import org.apache.spark.sql.connector.catalog.{SupportsRead, Table, TableCapability, TableProvider}
 import org.apache.spark.sql.connector.expressions.Transform
 import org.apache.spark.sql.connector.read._
 import org.apache.spark.sql.types._
 import org.apache.spark.sql.util.CaseInsensitiveStringMap
+import org.apache.spark.unsafe.types.UTF8String
 import java.util
 
 /** DataSource V2 evidence table (SURVEY §1.1 / §7.3 "optional custom DSv2
@@ -26,6 +28,11 @@ import java.util
   * the shape that scales to a 1000-executor cluster. Column pruning is
   * honored: a query that never touches `data` never reads the image
   * payload (only the header for the length).
+  *
+  * With `.option("mode", "hits")` each task instead runs the signature
+  * half of the stage-1 kernel (`CarvePipeline.ChunkScanner`) over its
+  * chunk and emits hit rows or pushed partial counts. Both modes share
+  * one partition plan ([[EvidenceChunkScan]]).
   */
 class EvidenceSource extends TableProvider {
 
@@ -44,11 +51,9 @@ class EvidenceSource extends TableProvider {
     val overlap = Option(opts.get("overlap")).map(_.toLong).getOrElse(65536L)
     // container dispatch: raw | ewf | auto (default sniffs the EWF
     // signature, so .E01 images need no flag)
-    if (Option(opts.get("mode")).contains("hits"))
-      new EvidenceHitsTable(path, format, chunkSize, overlap,
-        Option(opts.get("types")).map(_.split(",").map(_.trim).filter(_.nonEmpty).toSeq))
-    else
-      new EvidenceTable(path, format, chunkSize, overlap)
+    new EvidenceTable(path, format, chunkSize, overlap,
+      hits = Option(opts.get("mode")).contains("hits"),
+      types = Option(opts.get("types")).map(_.split(",").map(_.trim).filter(_.nonEmpty).toSeq))
   }
 }
 
@@ -68,16 +73,21 @@ object EvidenceSource {
     StructField("pattern_id", StringType, nullable = false)))
 }
 
-private[sources] class EvidenceTable(path: String, format: String, chunkSize: Long, overlap: Long)
+/** The chunk-row table, or with `hits` the `mode=hits` table. */
+private[sources] class EvidenceTable(path: String, format: String, chunkSize: Long, overlap: Long,
+    hits: Boolean, types: Option[Seq[String]])
     extends Table with SupportsRead {
   require(path != null, "graft evidence source requires option 'path'")
-  override def name(): String = s"evidence(`$path`)"
-  override def schema(): StructType = EvidenceSource.Schema
+  override def name(): String = s"${if (hits) "evidence_hits" else "evidence"}(`$path`)"
+  override def schema(): StructType = if (hits) EvidenceSource.HitsSchema else EvidenceSource.Schema
   override def capabilities(): util.Set[TableCapability] =
     util.EnumSet.of(TableCapability.BATCH_READ)
 
-  override def newScanBuilder(options: CaseInsensitiveStringMap): ScanBuilder =
-    new EvidenceScanBuilder(EvidenceOpen.ref(path, format), chunkSize, overlap)
+  override def newScanBuilder(options: CaseInsensitiveStringMap): ScanBuilder = {
+    val ref = EvidenceOpen.ref(path, format)
+    if (hits) new EvidenceHitsScanBuilder(ref, chunkSize, overlap, types)
+    else new EvidenceScanBuilder(ref, chunkSize, overlap)
+  }
 }
 
 private[sources] class EvidenceScanBuilder(ref: EvidenceRef, chunkSize: Long, overlap: Long)
@@ -86,27 +96,31 @@ private[sources] class EvidenceScanBuilder(ref: EvidenceRef, chunkSize: Long, ov
 
   override def pruneColumns(requiredSchema: StructType): Unit = required = requiredSchema
 
-  override def build(): Scan = new Scan with Batch {
+  override def build(): Scan = new EvidenceChunkScan(ref, chunkSize, overlap) {
     override def readSchema(): StructType = required
-    override def toBatch: Batch = this
-
-    override def planInputPartitions(): Array[InputPartition] = {
-      val len = {
-        val r = ref.open()
-        try r.length finally r.close()
-      }
-      ChunkPlanner.planLocal(len, chunkSize, overlap)
-        .map(c => EvidenceChunkPartition(c.id, c.start, c.length, c.validLength): InputPartition)
-        .toArray
-    }
-
     override def createReaderFactory(): PartitionReaderFactory =
       new EvidenceReaderFactory(ref, required)
   }
 }
 
-private[sources] case class EvidenceChunkPartition(
-    id: Long, start: Long, length: Long, validLength: Long) extends InputPartition
+/** The partition plan every evidence scan shares: one partition per
+  * chunk of [[ChunkPlanner]]'s rule, so each task preads exactly its
+  * range.
+  */
+private[sources] abstract class EvidenceChunkScan(ref: EvidenceRef, chunkSize: Long, overlap: Long)
+    extends Scan with Batch {
+  override def toBatch: Batch = this
+
+  override def planInputPartitions(): Array[InputPartition] = {
+    val len = {
+      val r = ref.open()
+      try r.length finally r.close()
+    }
+    ChunkPlanner.planLocal(len, chunkSize, overlap).map(EvidenceChunkPartition(_): InputPartition).toArray
+  }
+}
+
+private[sources] case class EvidenceChunkPartition(chunk: ScanChunk) extends InputPartition
 
 /** `mode=hits`: the signature scan itself runs INSIDE the DSv2 scan, and
   * `file_type` predicates push down into automaton construction — a
@@ -116,19 +130,6 @@ private[sources] case class EvidenceChunkPartition(
   * after (the `--types` semantics of the reference's
   * filter_file_types, src/config.rs, applied at the source).
   */
-private[sources] class EvidenceHitsTable(path: String, format: String,
-    chunkSize: Long, overlap: Long, types: Option[Seq[String]])
-    extends Table with SupportsRead {
-  require(path != null, "graft evidence source requires option 'path'")
-  override def name(): String = s"evidence_hits(`$path`)"
-  override def schema(): StructType = EvidenceSource.HitsSchema
-  override def capabilities(): util.Set[TableCapability] =
-    util.EnumSet.of(TableCapability.BATCH_READ)
-
-  override def newScanBuilder(options: CaseInsensitiveStringMap): ScanBuilder =
-    new EvidenceHitsScanBuilder(EvidenceOpen.ref(path, format), chunkSize, overlap, types)
-}
-
 private[sources] class EvidenceHitsScanBuilder(ref: EvidenceRef, chunkSize: Long,
     overlap: Long, typesOption: Option[Seq[String]])
     extends ScanBuilder
@@ -212,109 +213,37 @@ private[sources] class EvidenceHitsScanBuilder(ref: EvidenceRef, chunkSize: Long
 
   override def pushedFilters(): Array[Filter] = pushed
 
-  override def build(): Scan = aggMode match {
-    case Some(grouped) => new EvidenceHitsCountScan(ref, chunkSize, overlap,
-      allowedTypes.map(_.toSeq.sorted), grouped)
-    case None => new EvidenceHitsScan(ref, chunkSize, overlap,
-      allowedTypes.map(_.toSeq.sorted), required, limitN)
-  }
+  override def build(): Scan = new EvidenceHitsScan(ref, chunkSize, overlap,
+    allowedTypes.map(_.toSeq.sorted), required, limitN, aggMode)
 }
 
-/** Pushed-COUNT scan: one partial-count row per (partition, file_type)
-  * (or one per partition for a global COUNT(*)); Spark's final
-  * aggregation sums the partials.
+/** The `mode=hits` scan. Without a pushed aggregate it emits one row per
+  * hit, capped per partition at the pushed limit. With a pushed COUNT(*)
+  * (`countGrouped` = Some(grouped)) it emits one partial-count row per
+  * (partition, file_type), or one per partition for a global COUNT(*);
+  * Spark's final aggregation sums the partials.
   */
-private[graft] class EvidenceHitsCountScan(ref: EvidenceRef, chunkSize: Long,
-    overlap: Long, val pushedTypes: Option[Seq[String]], grouped: Boolean)
-    extends Scan with Batch {
-  override def readSchema(): StructType =
-    if (grouped) StructType(Seq(
-      StructField("file_type", StringType, nullable = false),
-      StructField("count", LongType, nullable = false)))
-    else StructType(Seq(StructField("count", LongType, nullable = false)))
-  override def toBatch: Batch = this
-  override def description(): String =
-    s"graft evidence hits, PushedAggregation: count(*)" +
-      (if (grouped) " group by file_type" else "") +
-      s", PushedTypes: ${pushedTypes.map(_.mkString("[", ",", "]")).getOrElse("ALL")}"
-
-  override def planInputPartitions(): Array[InputPartition] = {
-    val len = {
-      val r = ref.open()
-      try r.length finally r.close()
-    }
-    ChunkPlanner.planLocal(len, chunkSize, overlap)
-      .map(c => EvidenceChunkPartition(c.id, c.start, c.length, c.validLength): InputPartition)
-      .toArray
-  }
-
-  override def createReaderFactory(): PartitionReaderFactory =
-    new EvidenceHitsCountReaderFactory(ref, pushedTypes, grouped)
-}
-
-private[sources] class EvidenceHitsCountReaderFactory(ref: EvidenceRef,
-    types: Option[Seq[String]], grouped: Boolean)
-    extends PartitionReaderFactory {
-  @transient private lazy val scan: graft.scan.SignatureScan =
-    EvidenceHitsReaderFactory.scanFor(types)
-
-  override def createReader(partition: InputPartition): PartitionReader[InternalRow] = {
-    val p = partition.asInstanceOf[EvidenceChunkPartition]
-    new PartitionReader[InternalRow] {
-      private lazy val reader = ref.open()
-      private var rows: Iterator[InternalRow] = _
-
-      private def ensure(): Unit = if (rows == null) {
-        val buf = new Array[Byte](p.length.toInt)
-        var got = 0
-        var n = 1
-        while (got < buf.length && n > 0) {
-          n = reader.readAt(p.start + got, buf, got, buf.length - got)
-          got += n
-        }
-        val chunk = graft.core.ScanChunk(p.id, p.start, p.length, p.validLength)
-        val hits = scan.normalize(chunk, scan.scanChunk(chunk, buf, got))
-        rows =
-          if (grouped)
-            hits.groupBy(h => scan.patterns(h.patternId).fileTypeId)
-              .toSeq.sortBy(_._1)
-              .map { case (ft, hs) => InternalRow(
-                org.apache.spark.unsafe.types.UTF8String.fromString(ft),
-                hs.size.toLong) }
-              .iterator
-          else Iterator.single(InternalRow(hits.size.toLong))
-      }
-
-      override def next(): Boolean = { ensure(); rows.hasNext }
-      override def get(): InternalRow = rows.next()
-      override def close(): Unit = reader.close()
-    }
-  }
-}
-
 private[graft] class EvidenceHitsScan(ref: EvidenceRef, chunkSize: Long,
     overlap: Long, val pushedTypes: Option[Seq[String]], required: StructType,
-    val pushedLimit: Option[Int] = None)
-    extends Scan with Batch {
-  override def readSchema(): StructType = required
-  override def toBatch: Batch = this
-  override def description(): String =
-    s"graft evidence hits, PushedTypes: ${pushedTypes.map(_.mkString("[", ",", "]")).getOrElse("ALL")}" +
-      pushedLimit.map(n => s", PushedLimit: $n").getOrElse("")
-
-  override def planInputPartitions(): Array[InputPartition] = {
-    val len = {
-      val r = ref.open()
-      try r.length finally r.close()
+    val pushedLimit: Option[Int], countGrouped: Option[Boolean])
+    extends EvidenceChunkScan(ref, chunkSize, overlap) {
+  override def readSchema(): StructType = countGrouped match {
+    case Some(grouped) => StructType(
+      (if (grouped) Seq(StructField("file_type", StringType, nullable = false)) else Nil) :+
+        StructField("count", LongType, nullable = false))
+    case None => required
+  }
+  override def description(): String = {
+    val types = s"PushedTypes: ${pushedTypes.map(_.mkString("[", ",", "]")).getOrElse("ALL")}"
+    countGrouped match {
+      case Some(grouped) => "graft evidence hits, PushedAggregation: count(*)" +
+        (if (grouped) " group by file_type" else "") + s", $types"
+      case None => s"graft evidence hits, $types" + pushedLimit.map(n => s", PushedLimit: $n").getOrElse("")
     }
-    ChunkPlanner.planLocal(len, chunkSize, overlap)
-      .map(c => EvidenceChunkPartition(c.id, c.start, c.length, c.validLength): InputPartition)
-      .toArray
   }
 
   override def createReaderFactory(): PartitionReaderFactory =
-    new EvidenceHitsReaderFactory(ref, chunkSize, overlap, pushedTypes, required,
-      pushedLimit)
+    new EvidenceHitsReaderFactory(ref, pushedTypes, required, pushedLimit, countGrouped)
 }
 
 private[sources] object EvidenceHitsReaderFactory {
@@ -323,59 +252,54 @@ private[sources] object EvidenceHitsReaderFactory {
   // This JVM-level cache (keyed by the pruned type set) makes the
   // compile once-per-executor for real — at a 100 TB image's ~200k
   // partitions that is the difference between 1 and 200k compiles.
-  private val cache =
-    new java.util.concurrent.ConcurrentHashMap[String, graft.scan.SignatureScan]()
+  private val cache = new java.util.concurrent.ConcurrentHashMap[String, ChunkScanner]()
 
-  private[sources] def scanFor(types: Option[Seq[String]]): graft.scan.SignatureScan =
-    cache.computeIfAbsent(types.map(_.mkString(",")).getOrElse(" ALL"), _ => {
+  private[sources] def scannerFor(types: Option[Seq[String]]): ChunkScanner =
+    cache.computeIfAbsent(types.map(_.mkString(",")).getOrElse("\u0000ALL"), _ => {
       val (cfg, _) = graft.carve.EngineConfig.filterFileTypes(
         graft.carve.EngineConfig(), types, disableZip = false)
-      graft.scan.SignatureScan(cfg)
+      ChunkScanner(cfg, runId = "", enableStrings = false, enableEntropy = false)
     })
 }
 
-private[sources] class EvidenceHitsReaderFactory(ref: EvidenceRef, chunkSize: Long,
-    overlap: Long, types: Option[Seq[String]], schema: StructType,
-    limit: Option[Int] = None)
+/** Reads a chunk once, takes the signature half of the shared stage-1
+  * kernel over it, then emits hit rows or partial counts (see
+  * [[EvidenceHitsScan]]).
+  */
+private[sources] class EvidenceHitsReaderFactory(ref: EvidenceRef,
+    types: Option[Seq[String]], schema: StructType, limit: Option[Int],
+    countGrouped: Option[Boolean])
     extends PartitionReaderFactory {
-  @transient private lazy val scan: graft.scan.SignatureScan =
-    EvidenceHitsReaderFactory.scanFor(types)
+  @transient private lazy val scanner = EvidenceHitsReaderFactory.scannerFor(types)
 
   override def createReader(partition: InputPartition): PartitionReader[InternalRow] = {
-    val p = partition.asInstanceOf[EvidenceChunkPartition]
+    val chunk = partition.asInstanceOf[EvidenceChunkPartition].chunk
     new PartitionReader[InternalRow] {
       private lazy val reader = ref.open()
-      private var hits: Iterator[graft.core.NormalizedHit] = _
-
-      private def ensure(): Unit = if (hits == null) {
-        val buf = new Array[Byte](p.length.toInt)
-        var got = 0
-        var n = 1
-        while (got < buf.length && n > 0) {
-          n = reader.readAt(p.start + got, buf, got, buf.length - got)
-          got += n
-        }
-        val chunk = graft.core.ScanChunk(p.id, p.start, p.length, p.validLength)
-        val all = scan.normalize(chunk, scan.scanChunk(chunk, buf, got)).iterator
-        hits = limit.fold(all)(all.take)
-      }
-
-      override def next(): Boolean = { ensure(); hits.hasNext }
-
-      override def get(): InternalRow = {
-        val h = hits.next()
-        val pat = scan.patterns(h.patternId)
-        InternalRow.fromSeq(schema.fields.toIndexedSeq.map {
-          _.name match {
-            case "global_offset" => h.globalOffset
-            case "file_type" =>
-              org.apache.spark.unsafe.types.UTF8String.fromString(pat.fileTypeId)
-            case "pattern_id" =>
-              org.apache.spark.unsafe.types.UTF8String.fromString(pat.patternId)
+      private lazy val rows: Iterator[InternalRow] = {
+        val buf = new Array[Byte](chunk.length.toInt)
+        val hits = scanner.hits(chunk, buf, reader.readFully(chunk.start, buf, 0, buf.length))
+        def typeOf(h: NormalizedHit) = scanner.signatures.patterns(h.patternId)
+        countGrouped match {
+          case Some(true) =>
+            hits.groupBy(h => typeOf(h).fileTypeId).toSeq.sortBy(_._1).iterator
+              .map { case (ft, hs) => InternalRow(UTF8String.fromString(ft), hs.size.toLong) }
+          case Some(false) => Iterator.single(InternalRow(hits.size.toLong))
+          case None => limit.fold(hits.iterator)(hits.iterator.take).map { h =>
+            val pat = typeOf(h)
+            InternalRow.fromSeq(schema.fields.toIndexedSeq.map {
+              _.name match {
+                case "global_offset" => h.globalOffset
+                case "file_type" => UTF8String.fromString(pat.fileTypeId)
+                case "pattern_id" => UTF8String.fromString(pat.patternId)
+              }
+            })
           }
-        })
+        }
       }
 
+      override def next(): Boolean = rows.hasNext
+      override def get(): InternalRow = rows.next()
       override def close(): Unit = reader.close()
     }
   }
@@ -384,7 +308,7 @@ private[sources] class EvidenceHitsReaderFactory(ref: EvidenceRef, chunkSize: Lo
 private[sources] class EvidenceReaderFactory(ref: EvidenceRef, schema: StructType)
     extends PartitionReaderFactory {
   override def createReader(partition: InputPartition): PartitionReader[InternalRow] = {
-    val p = partition.asInstanceOf[EvidenceChunkPartition]
+    val chunk = partition.asInstanceOf[EvidenceChunkPartition].chunk
     new PartitionReader[InternalRow] {
       private var emitted = false
       private lazy val reader = ref.open()
@@ -395,17 +319,12 @@ private[sources] class EvidenceReaderFactory(ref: EvidenceRef, schema: StructTyp
         emitted = true
         val values = schema.fields.map {
           _.name match {
-            case "chunk_id" => p.id
-            case "start" => p.start
-            case "valid_length" => p.validLength
+            case "chunk_id" => chunk.id
+            case "start" => chunk.start
+            case "valid_length" => chunk.validLength
             case "data" =>
-              val buf = new Array[Byte](p.length.toInt)
-              var got = 0
-              var n = 1
-              while (got < buf.length && n > 0) {
-                n = reader.readAt(p.start + got, buf, got, buf.length - got)
-                got += n
-              }
+              val buf = new Array[Byte](chunk.length.toInt)
+              val got = reader.readFully(chunk.start, buf, 0, buf.length)
               if (got == buf.length) buf else java.util.Arrays.copyOf(buf, got)
           }
         }

@@ -2,7 +2,7 @@ package graft.sqlite
 
 import graft.core.{BrowserCookieRecord, BrowserDownloadRecord, BrowserHistoryRecord, CarvedFile}
 import graft.evidence.EvidenceRef
-import org.apache.spark.sql.{Dataset, SparkSession}
+import org.apache.spark.sql.{Dataset, Encoder, SparkSession}
 
 /** Distributed browser-artefact stage: for every carved SQLite file,
   * re-read its byte range from the evidence and run the pure-Scala
@@ -19,17 +19,25 @@ object SqliteArtefacts {
     */
   private val MaxDbBytes: Long = Int.MaxValue.toLong
 
-  private def loadDb(ref: EvidenceRef, c: CarvedFile): Option[SqliteFile] = {
-    if (c.size > MaxDbBytes) return None
-    val reader = ref.open()
-    try {
-      val bytes = reader.readExactAt(c.globalStart, c.size.toInt)
-      bytes.flatMap { b =>
-        try Some(new SqliteFile(b))
-        catch { case _: Exception => None }
+  /** The one loader behind all three browser streams: every carved
+    * SQLite within [[MaxDbBytes]] is re-read from the evidence and
+    * parsed, and `rows` gets its raw bytes (history's page recovery
+    * scans them) with the parse, None when it does not parse. A short
+    * read yields no rows.
+    */
+  private def fromDbs[T: Encoder](evidenceRef: EvidenceRef, carved: Dataset[CarvedFile])(
+      rows: (CarvedFile, Array[Byte], Option[SqliteFile]) => Seq[T]): Dataset[T] =
+    carved.filter(c => c.fileType == "sqlite" && c.size <= MaxDbBytes).flatMap { c =>
+      val reader = evidenceRef.open()
+      val bytes = try reader.readExactAt(c.globalStart, c.size.toInt) finally reader.close()
+      bytes.toSeq.flatMap { b =>
+        rows(c, b, try Some(new SqliteFile(b)) catch { case _: Exception => None })
       }
-    } finally reader.close()
-  }
+    }
+
+  /** One extractor's records; a parse or extractor failure yields none. */
+  private def extracted[T](db: Option[SqliteFile])(extract: SqliteFile => Seq[T]): Seq[T] =
+    db.toSeq.flatMap(d => try extract(d) catch { case _: Exception => Seq.empty })
 
   /** With `pageRecovery` (reference enable_sqlite_page_recovery,
     * pipeline/workers.rs:319-326): a DB whose table-level parse yields
@@ -38,35 +46,21 @@ object SqliteArtefacts {
   def history(spark: SparkSession, evidenceRef: EvidenceRef, carved: Dataset[CarvedFile],
               runId: String, pageRecovery: Boolean = false): Dataset[BrowserHistoryRecord] = {
     import spark.implicits._
-    carved.filter(c => c.fileType == "sqlite" && c.size <= MaxDbBytes).flatMap { c =>
-      val reader = evidenceRef.open()
-      val bytes = try reader.readExactAt(c.globalStart, c.size.toInt) finally reader.close()
-      bytes.toSeq.flatMap { b =>
-        val viaDb =
-          try {
-            val db = new SqliteFile(b)
-            BrowserExtract.history(db, runId, c.path)
-          } catch { case _: Exception => Seq.empty[BrowserHistoryRecord] }
-        if (viaDb.nonEmpty || !pageRecovery) viaDb
-        else SqlitePages.extractHistory(b, runId, c.path)
-      }
+    fromDbs(evidenceRef, carved) { (c, bytes, db) =>
+      val viaDb = extracted(db)(BrowserExtract.history(_, runId, c.path))
+      if (viaDb.nonEmpty || !pageRecovery) viaDb
+      else SqlitePages.extractHistory(bytes, runId, c.path)
     }
   }
 
   def cookies(spark: SparkSession, evidenceRef: EvidenceRef, carved: Dataset[CarvedFile], runId: String): Dataset[BrowserCookieRecord] = {
     import spark.implicits._
-    carved.filter(_.fileType == "sqlite").flatMap { c =>
-      loadDb(evidenceRef, c).toSeq.flatMap(db =>
-        try BrowserExtract.cookies(db, runId, c.path) catch { case _: Exception => Seq.empty })
-    }
+    fromDbs(evidenceRef, carved)((c, _, db) => extracted(db)(BrowserExtract.cookies(_, runId, c.path)))
   }
 
   def downloads(spark: SparkSession, evidenceRef: EvidenceRef, carved: Dataset[CarvedFile], runId: String): Dataset[BrowserDownloadRecord] = {
     import spark.implicits._
-    carved.filter(_.fileType == "sqlite").flatMap { c =>
-      loadDb(evidenceRef, c).toSeq.flatMap(db =>
-        try BrowserExtract.downloads(db, runId, c.path) catch { case _: Exception => Seq.empty })
-    }
+    fromDbs(evidenceRef, carved)((c, _, db) => extracted(db)(BrowserExtract.downloads(_, runId, c.path)))
   }
 
   /** Unified activity timeline — the log2timeline-style view an

@@ -207,6 +207,61 @@ class EvidenceSourceSpec extends AnyFunSuite with BeforeAndAfterAll {
       spark, graft.evidence.RawFileRef(img.toString), cfg, "raw", false, false)
     assert(raw.carvedFiles.collect().map(_.globalStart).toSeq == Seq(4090L))
   }
+  test("stage 1 agrees across run, scanChunkTable and DSv2 hits with strings and entropy on") {
+    import graft.pipeline.CarvePipeline
+    val (cs, ov, tail) = (4096, 256, 1000)
+    // more chunks than scan tasks, so one task's reused read buffer holds
+    // the random and text chunks before the short tail chunk
+    val n = 3 * spark.sparkContext.defaultParallelism
+    val rnd = new scala.util.Random(11)
+    val bytes = new Array[Byte]((n - 1) * cs + tail)
+    def put(at: Int, b: Array[Byte]): Unit = System.arraycopy(b, 0, bytes, at, b.length)
+    for (i <- 0 until n - 1) {
+      if (i % 2 == 0) {
+        val page = new Array[Byte](cs); rnd.nextBytes(page); put(i * cs, page)
+      } else {
+        val line = s"visit http://example.org/p$i or mail user$i@example.com call 555-123-4567\n"
+        put(i * cs, (line * (cs / line.length)).getBytes("UTF-8"))
+      }
+      // stale bytes past the tail's end: scanning past `got` would read
+      // "bob@example.com" out of the tail's trailing "write to bob"
+      put(i * cs + tail, "@example.com now".getBytes("UTF-8"))
+    }
+    val tailText = "write to bob".getBytes("UTF-8")
+    put((n - 1) * cs + tail - tailText.length, tailText)
+    put(1 * cs + 200, graft.fixtures.FixtureBytes.jpeg())
+    put(4 * cs + 4000, graft.fixtures.FixtureBytes.png()) // header owned by chunk 4, body past it
+    put(6 * cs + cs - 2, graft.fixtures.FixtureBytes.jpeg()) // header straddles chunks 6 and 7
+    val img = Files.createTempFile("evstage1", ".dd")
+    Files.write(img, bytes)
+    val cfg = graft.carve.EngineConfig(chunkSize = cs, overlap = ov, stringScanUtf16 = true,
+      entropyWindowSize = 256, entropyThreshold = 7.0)
+    def load(mode: String) = spark.read.format("graft.sources.EvidenceSource")
+      .option("path", img.toString).option("chunkSize", cs.toString).option("overlap", ov.toString)
+      .option("mode", mode).load()
+
+    val raw = CarvePipeline.run(spark, graft.evidence.RawFileRef(img.toString), cfg, "eq")
+    val viaRun = raw.scanned.collect().sortBy(_.chunkId).toSeq
+    raw.release()
+    val viaTable = CarvePipeline.scanChunkTable(spark, load("chunks"), cfg, "eq")
+      .collect().sortBy(_.chunkId).toSeq
+    assert(viaRun.size == n)
+    assert(viaRun.exists(_.hits.nonEmpty) && viaRun.exists(_.artefacts.nonEmpty) &&
+      viaRun.exists(_.regions.nonEmpty), s"a stage-1 half found nothing: $viaRun")
+    assert(viaRun == viaTable)
+    assert(!viaRun.flatMap(_.artefacts).exists(_.content.contains("bob@")),
+      "the tail scan read stale buffer bytes past the chunk's end")
+
+    val patterns = graft.scan.SignatureScan(cfg).patterns
+    val runHits = viaRun.flatMap(_.hits).map { h =>
+      (h.globalOffset, patterns(h.patternId).fileTypeId, patterns(h.patternId).patternId)
+    }.sorted
+    val dsv2Hits = load("hits").collect()
+      .map(r => (r.getLong(0), r.getString(1), r.getString(2))).toSeq.sorted
+    assert(runHits.map(_._1).contains(7L * cs - 2), s"straddling header missed: $runHits")
+    assert(dsv2Hits == runHits)
+  }
+
   test("EwfRef reads a synthesized E01: geometry, cross-chunk reads, EOF") {
     import graft.evidence.EwfRef
     import graft.fixtures.FixtureBytes

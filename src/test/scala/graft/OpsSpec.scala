@@ -411,6 +411,25 @@ class OpsSpec extends AnyFunSuite with BeforeAndAfterAll {
     }
   }
 
+  test("chunk geometry a JVM byte array cannot hold is rejected at planning") {
+    import graft.core.ChunkPlanner
+    val big = 2048L * 1024 * 1024 // GRAFT_CHUNK_MIB=2048: chunk + overlap > Int.MaxValue
+    def rejects(plan: => Any): Unit = {
+      val e = intercept[IllegalArgumentException](plan)
+      assert(e.getMessage.contains(s"chunk size $big + overlap"), e.getMessage)
+    }
+    rejects(ChunkPlanner.planLocal(10L, big, 65536L))
+    rejects(ChunkPlanner.plan(spark, 10L, big, 65536L))
+    val negative = intercept[IllegalArgumentException](ChunkPlanner.planLocal(10L, 4096L, -1L))
+    assert(negative.getMessage.contains("overlap -1"), negative.getMessage)
+    // the largest geometry an array holds still plans
+    assert(ChunkPlanner.planLocal(10L, ChunkPlanner.MaxChunkBytes - 65536L, 65536L)
+      .map(_.length) == Seq(10L))
+    // the CLI override reaches the same rule before any chunk is read
+    rejects(Carve.runJob(Array(writeImage(new Array[Byte](4096)).toString, tmp()),
+      Map("GRAFT_CHUNK_MIB" -> "2048", "GRAFT_RUN_ID" -> "bigchunk"), stopSession = false))
+  }
+
   test("Carve main writes a checkpoint at a cap stop; resume completes to byte parity") {
     spark
     val jpeg = FixtureBytes.jpeg()

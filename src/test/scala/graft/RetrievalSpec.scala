@@ -103,6 +103,28 @@ class RetrievalSpec extends AnyFunSuite with BeforeAndAfterAll {
     }
   }
 
+  test("bm25TopK gives the same output with ANSI on and off when a text is NULL") {
+    import spark.implicits._
+    // every term ties at df 1 or 2: a posting for the NULL text would
+    // sort first among the df-1 terms and displace a real probe term
+    val docs = Seq[(Long, String)](1L -> "a b", 2L -> "b c", 3L -> null, 4L -> "c d")
+    def topK(ansi: Boolean) = {
+      spark.conf.set("spark.sql.ansi.enabled", ansi.toString)
+      try Retrieval.bm25TopK(docs.toDF("doc_id", "text"), "doc_id", "text",
+          nQueries = 2, termsPerQuery = 2, k = 4)
+        .orderBy("qid", "rnk")
+        .collect().map(r => (r.getLong(0), r.getLong(1), r.getLong(2),
+          r.getLong(3), r.getLong(4))).toSeq
+      finally { graft.llm.CacheRegistry.releaseAll(spark); spark.catalog.clearCache() }
+    }
+    val saved = spark.conf.get("spark.sql.ansi.enabled")
+    try {
+      val on = topK(ansi = true)
+      assert(on == refBm25(docs.filter(_._2 != null), nQueries = 2, termsPerQuery = 2, k = 4))
+      assert(topK(ansi = false) == on)
+    } finally spark.conf.set("spark.sql.ansi.enabled", saved)
+  }
+
   test("bm25TopK breaks score ties on ascending doc id") {
     import spark.implicits._
     // identical docs -> identical scores for every query term
