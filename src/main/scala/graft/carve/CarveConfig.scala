@@ -46,6 +46,9 @@ final case class EngineConfig(
     maxFiles: Option[Long] = None,
     maxBytes: Option[Long] = None,
     maxChunks: Option[Long] = None) {
+  // budgets above Int.MaxValue are clamped where they are applied
+  require(maxFiles.forall(_ >= 0) && maxChunks.forall(_ >= 0),
+    s"negative budget: max_files ${maxFiles.getOrElse("-")}, max_chunks ${maxChunks.getOrElse("-")}")
 
   /** Stable digest of the effective configuration — lands in the sink
     * provenance columns (reference config_hash, src/config.rs:99).

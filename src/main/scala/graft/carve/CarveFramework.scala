@@ -5,10 +5,12 @@ import graft.evidence.EvidenceReader
 import java.security.MessageDigest
 
 /** Carve-stage plumbing with exact reference semantics
-  * (src/carve/mod.rs:104-351): streamed copy with incremental MD5/SHA-256,
-  * max_size enforcement mid-stream, EOF tolerance, min_size drop, and the
-  * shared CarvedFile assembly. Error strings match the reference's
-  * thiserror Display forms — they land in the `errors` column.
+  * (src/carve/mod.rs:104-351). Every carver ends in one of two tails:
+  * the structure walkers stream through a [[CarveStream]]; every other
+  * carver decides its extent first and hands it to [[CarveOps.finish]],
+  * the one streamed copy with incremental MD5/SHA-256, EOF tolerance,
+  * min_size drop and CarvedFile assembly. Error strings match the
+  * reference's thiserror Display forms — they land in the `errors` column.
   */
 object CarveErrors {
   final class Invalid(val msg: String) extends Exception(msg)
@@ -19,7 +21,9 @@ object CarveErrors {
 /** Per-task context: evidence handle + run metadata. `payloadSink`, when
   * set, receives carved bytes keyed by relative path (local dir or object
   * storage adapter); metadata-only runs pass None — hashing happens
-  * regardless.
+  * regardless. A sink call `(relPath, bytes, len)` carries bytes[0, len);
+  * the array is the carver's reused read buffer and is valid only during
+  * the call, so a sink writes or copies it before returning.
   */
 final case class ExtractionContext(
     runId: String,
@@ -72,11 +76,29 @@ final class CarveStream(
     buf
   }
 
+  /** Copy the evidence forward to `end` through one reused buffer
+    * (reference write_range, src/carve/mod.rs:315-351); false when the
+    * evidence ends first. A short read is not the end — an E01 reader
+    * serves one chunk per call — only a read of 0 bytes is.
+    */
+  def copyTo(end: Long): Boolean = {
+    val buf = new Array[Byte](Scan.BufSize)
+    while (offset < end) {
+      val n = ctx.evidence.readAt(offset, buf, 0, math.min(end - offset, Scan.BufSize.toLong).toInt)
+      if (n == 0) return false
+      writeBytes(buf, 0, n)
+    }
+    true
+  }
+
   def writeBytes(buf: Array[Byte], off: Int, len: Int): Unit = {
     if (maxSize > 0 && written0 + len > maxSize) throw new CarveErrors.Truncated
     md5.update(buf, off, len)
     sha256.update(buf, off, len)
-    ctx.payloadSink.foreach(sink => sink(relPath, java.util.Arrays.copyOfRange(buf, off, off + len), len))
+    // the sink reads bytes[0, len) during the call (ExtractionContext), so
+    // only a block that does not start the buffer is copied
+    ctx.payloadSink.foreach(sink =>
+      sink(relPath, if (off == 0) buf else java.util.Arrays.copyOfRange(buf, off, off + len), len))
     offset += len
     written0 += len
   }
@@ -101,35 +123,35 @@ object Hex {
 
 object CarveOps {
 
-  /** Copy-and-hash [start, end) with 64 KiB buffers; returns
-    * (bytesWritten, eofTruncated) — reference write_range
-    * (src/carve/mod.rs:315-351).
+  /** The one carve tail of every carver that decides its extent before
+    * copying: stream [start, end) to the payload under the record's final
+    * path, hashing as it goes; drop the carve under minSize; build the
+    * record. When the evidence ends before `end` the carve is truncated,
+    * `eofError` (if any) is appended to `errors`, and with
+    * `eofInvalidates` it is no longer validated.
     */
-  def writeRange(
+  def finish(
       ctx: ExtractionContext,
-      relPath: String,
+      hit: CarveHit,
+      fileType: String,
+      extension: String,
       start: Long,
       end: Long,
-      md5: MessageDigest,
-      sha256: MessageDigest): (Long, Boolean) = {
-    var offset = start
-    var remaining = math.max(0L, end - start)
-    var written = 0L
-    val bufSize = 64 * 1024
-    val buf = new Array[Byte](bufSize)
-    while (remaining > 0) {
-      val readLen = math.min(remaining, bufSize.toLong).toInt
-      val n = ctx.evidence.readAt(offset, buf, 0, readLen)
-      if (n == 0) return (written, true)
-      md5.update(buf, 0, n)
-      sha256.update(buf, 0, n)
-      ctx.payloadSink.foreach(sink => sink(relPath, java.util.Arrays.copyOfRange(buf, 0, n), n))
-      written += n
-      offset += n
-      remaining -= n
-      if (n < readLen) return (written, true)
-    }
-    (written, false)
+      minSize: Long,
+      validated: Boolean,
+      truncated: Boolean,
+      errors: Seq[String],
+      eofError: String = "",
+      eofInvalidates: Boolean = false): Option[CarvedFile] = {
+    val stream = new CarveStream(ctx, Naming.relPath(fileType, extension, start), start, 0L)
+    val whole = stream.copyTo(end)
+    val (size, md5Hex, sha256Hex) = stream.finish()
+    if (size < minSize) None
+    else Some(carvedFile(ctx, fileType, extension, start, size, md5Hex, sha256Hex,
+      validated = validated && (whole || !eofInvalidates),
+      truncated = truncated || !whole,
+      errors = if (whole || eofError.isEmpty) errors else errors :+ eofError,
+      patternId = hit.patternId))
   }
 
   def globalEnd(globalStart: Long, size: Long): Long =
@@ -165,10 +187,8 @@ object CarveOps {
 }
 
 /** Shared shape for declared-size carvers: validate the header, compute a
-  * target end, then writeRange + the standard min-size / flag handling
-  * with `validated = !eofTruncated` (the 7z/lrf/elf/wmv/mobi/bmp/ico/tiff
-  * family). Carvers with extra error strings or different validated
-  * semantics override pieces.
+  * target end, then [[CarveOps.finish]] with `validated = !truncated`
+  * (the 7z/lrf/elf/wmv/mobi/bmp/ico family).
   */
 abstract class RangeCarver extends CarveHandler {
   def maxSize: Long
@@ -186,24 +206,11 @@ abstract class RangeCarver extends CarveHandler {
     val planned =
       try plan(hit, ctx)
       catch { case _: CarveErrors.Invalid => None }
-    planned.flatMap { case (start, targetEnd0, preErrors, preTruncated) =>
-      var targetEnd = targetEnd0
-      if (maxSize > 0) targetEnd = math.min(targetEnd, start + maxSize)
-      val relPath = Naming.relPath(fileType, extension, start)
-      val md5 = MessageDigest.getInstance("MD5")
-      val sha256 = MessageDigest.getInstance("SHA-256")
-      val (written, eofTruncated) = CarveOps.writeRange(ctx, relPath, start, targetEnd, md5, sha256)
-      if (written < minSize) None
-      else {
-        var errors = preErrors
-        if (eofTruncated && eofError.nonEmpty) errors = errors :+ eofError
-        val truncated = preTruncated || eofTruncated
-        Some(CarveOps.carvedFile(
-          ctx, fileType, extension, start, written,
-          Hex.lower(md5.digest()), Hex.lower(sha256.digest()),
-          validated = !truncated, truncated = truncated, errors = errors,
-          patternId = hit.patternId))
-      }
+    planned.flatMap { case (start, targetEnd, preErrors, preTruncated) =>
+      val end = if (maxSize > 0) math.min(targetEnd, start + maxSize) else targetEnd
+      CarveOps.finish(ctx, hit, fileType, extension, start, end, minSize,
+        validated = !preTruncated, truncated = preTruncated, errors = preErrors,
+        eofError = eofError, eofInvalidates = true)
     }
   }
 }

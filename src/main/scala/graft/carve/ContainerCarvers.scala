@@ -1,14 +1,14 @@
 package graft.carve
 
 import graft.core.CarvedFile
-import java.security.MessageDigest
 import scala.collection.mutable
 
 /** Classifying container carvers: ZIP (EOCD validation + docx/xlsx/pptx/
   * odt/ods/odp/epub classification) and OLE/CFB (FAT-based size refinement
   * + doc/xls/ppt classification). Classification reads the central
-  * directory / directory stream straight from the evidence — the carved
-  * payload is the same byte range.
+  * directory / directory stream straight from the evidence before any
+  * byte is copied, so the payload streams under its final name and a kind
+  * outside the allowed kinds is dropped before anything is written.
   */
 
 /** ZIP (reference src/carve/zip.rs:57-624). Two modes:
@@ -33,136 +33,45 @@ final class ZipCarver(
   private final case class ZipEocd(cdOffset: Long, cdSize: Long, commentLen: Int)
 
   override def processHit(hit: CarveHit, ctx: ExtractionContext): Option[CarvedFile] = {
-    var validated = false
-    var truncated = false
-    var errors = Vector.empty[String]
-    var eocd: Option[ZipEocd] = None
-    var totalEnd = 0L
-
-    if (requireEocd) {
-      val found = findEocd(ctx, hit.globalOffset).getOrElse(return None)
-      val (eocdOffset, parsed) = found
-      eocd = Some(parsed)
-      validated = true
-      totalEnd = eocdOffset + 22 + parsed.commentLen
-      if (maxSize > 0 && totalEnd > hit.globalOffset + maxSize) {
-        totalEnd = hit.globalOffset + maxSize
-        truncated = true
-        errors :+= "max_size reached after EOCD"
+    val start = hit.globalOffset
+    // looped prefix read for the gate: a short first readAt must not skip it
+    if (!Scan.readPrefix(ctx, start, Header.length).sameElements(Header)) return None
+    val maxEnd = Scan.maxEnd(start, maxSize)
+    val stop =
+      if (requireEocd) Scan.Found(findEocd(ctx, start, maxEnd).getOrElse(return None))
+      else Scan.search(ctx, start, maxEnd, Eocd.length - 1) { (window, len, at) =>
+        val pos = Scan.findPattern(window, len, Eocd)
+        if (pos < 0) -1L else at + pos
       }
-    } else {
-      // streaming mode: scan forward for the first EOCD signature
-      val maxEnd = if (maxSize > 0) hit.globalOffset + maxSize else Long.MaxValue
-      var offset = hit.globalOffset
-      var carry = Array.emptyByteArray
-      var first = true
-      var done = false
-      totalEnd = -1L
-      while (!done) {
-        if (offset >= maxEnd) {
-          truncated = true; errors :+= "max_size reached before EOCD"; done = true
-        } else {
-          val want = math.min(maxEnd - offset, Scan.BufSize.toLong).toInt
-          val buf = new Array[Byte](want)
-          val n = ctx.evidence.readAt(offset, buf, 0, want)
-          if (n == 0) {
-            truncated = true; errors :+= "eof before EOCD"; done = true
-          } else {
-            if (first) {
-              // looped prefix read for the gate: a short first readAt
-              // previously SKIPPED validation and carved unvalidated data
-              val head = if (n >= Header.length) buf.take(Header.length)
-                else graft.carve.Scan.readPrefix(ctx, offset, Header.length)
-              if (!head.sameElements(Header)) return None
-            }
-            first = false
-            val search = carry ++ buf.take(n)
-            val pos = Scan.findPattern(search, search.length, Eocd)
-            if (pos >= 0) {
-              val eocdOffset = offset - carry.length + pos
-              eocd = readEocd(ctx, eocdOffset)
-              totalEnd = eocd.map(e => eocdOffset + 22 + e.commentLen).getOrElse(eocdOffset + 22)
-              if (maxSize > 0 && totalEnd > hit.globalOffset + maxSize) {
-                totalEnd = hit.globalOffset + maxSize
-                truncated = true
-                errors :+= "max_size reached after EOCD"
-              }
-              validated = true
-              done = true
-            } else {
-              offset += n
-              carry = if (n >= Eocd.length - 1) buf.slice(n - (Eocd.length - 1), n) else buf.take(n)
-            }
-          }
-        }
-      }
-      if (totalEnd < 0) totalEnd = math.min(offset, maxEnd)
+    val (end, eocd, errors) = stop match {
+      case Scan.Found(eocdOffset) =>
+        val eocd = readEocd(ctx, eocdOffset)
+        val end = eocdOffset + 22 + eocd.fold(0)(_.commentLen)
+        if (end > maxEnd) (maxEnd, eocd, Seq("max_size reached after EOCD")) else (end, eocd, Nil)
+      case Scan.AtEof(at) => (at, None, Seq("eof before EOCD"))
+      case Scan.AtMax(at) => (at, None, Seq("max_size reached before EOCD"))
     }
-
-    val relPath0 = Naming.relPath(fileType, extension, hit.globalOffset)
-    val md5 = MessageDigest.getInstance("MD5")
-    val sha = MessageDigest.getInstance("SHA-256")
-    val (written, eofTruncated) = CarveOps.writeRange(ctx, relPath0, hit.globalOffset, totalEnd, md5, sha)
-    if (eofTruncated) {
-      truncated = true
-      errors :+= (if (validated) "eof before EOCD end" else "eof before EOCD")
-    }
-    if (written < minSize) return None
-
-    var outType = fileType
-    var outExt = extension
-    if (validated) eocd.foreach { parsed =>
-      classifyZip(ctx, hit.globalOffset, parsed.cdOffset, parsed.cdSize).foreach { kind =>
-        outType = kind
-        outExt = kind
-      }
-    }
+    val validated = stop.isInstanceOf[Scan.Found]
+    val kind = eocd.flatMap(e => classifyZip(ctx, start, e.cdOffset, e.cdSize))
+    val outType = kind.getOrElse(fileType)
     if (allowed.exists(a => !a.contains(outType))) return None
-
-    Some(CarveOps.carvedFile(ctx, outType, outExt, hit.globalOffset, written,
-      Hex.lower(md5.digest()), Hex.lower(sha.digest()), validated, truncated, errors,
-      hit.patternId).copy(path = Naming.relPath(outType, outExt, hit.globalOffset)))
+    CarveOps.finish(ctx, hit, outType, kind.getOrElse(extension), start, end, minSize,
+      validated, truncated = errors.nonEmpty, errors,
+      eofError = if (validated) "eof before EOCD end" else "eof before EOCD")
   }
 
   /** Scan from start for the LAST self-consistent EOCD (zip.rs:350-413). */
-  private def findEocd(ctx: ExtractionContext, start: Long): Option[(Long, ZipEocd)] = {
-    var offset = start
-    var bytesScanned = 0L
-    var carry = Array.emptyByteArray
-    var lastValid: Option[(Long, ZipEocd)] = None
-    var done = false
-    while (!done) {
-      if (maxSize > 0 && bytesScanned >= maxSize) done = true
-      else {
-        val want =
-          if (maxSize > 0) math.min(maxSize - bytesScanned, Scan.BufSize.toLong).toInt
-          else Scan.BufSize
-        val buf = new Array[Byte](want)
-        val n = ctx.evidence.readAt(offset, buf, 0, want)
-        if (n == 0) done = true
-        else {
-          if (bytesScanned == 0 && n >= Header.length &&
-              !buf.take(Header.length).sameElements(Header)) return None
-          val search = carry ++ buf.take(n)
-          var from = 0
-          var searching = true
-          while (searching) {
-            val pos = Scan.findPattern(search, search.length, Eocd, from)
-            if (pos < 0) searching = false
-            else {
-              val eocdOffset = offset - carry.length + pos
-              readEocd(ctx, eocdOffset).foreach { parsed =>
-                if (start + parsed.cdOffset + parsed.cdSize == eocdOffset)
-                  lastValid = Some((eocdOffset, parsed))
-              }
-              from = pos + 1
-            }
-          }
-          bytesScanned += n
-          offset += n
-          carry = if (n >= Eocd.length - 1) buf.slice(n - (Eocd.length - 1), n) else buf.take(n)
-        }
+  private def findEocd(ctx: ExtractionContext, start: Long, maxEnd: Long): Option[Long] = {
+    var lastValid: Option[Long] = None
+    Scan.search(ctx, start, maxEnd, Eocd.length - 1) { (window, len, at) =>
+      var pos = Scan.findPattern(window, len, Eocd)
+      while (pos >= 0) {
+        val eocdOffset = at + pos
+        if (readEocd(ctx, eocdOffset).exists(e => start + e.cdOffset + e.cdSize == eocdOffset))
+          lastValid = Some(eocdOffset)
+        pos = Scan.findPattern(window, len, Eocd, pos + 1)
       }
+      -1L
     }
     lastValid
   }
@@ -243,47 +152,27 @@ final class OleCarver(
   private def effectiveMax: Long = if (maxSize > 0) maxSize else 512L * 1024 * 1024
 
   override def processHit(hit: CarveHit, ctx: ExtractionContext): Option[CarvedFile] = {
-    // CarveStream with maxSize = effectiveMax (reference substitutes the
-    // 512 MiB default before constructing the stream, ole.rs:463-468).
-    val relPath = Naming.relPath(fileType, extension, hit.globalOffset)
-    val stream = new CarveStream(ctx, relPath, hit.globalOffset, effectiveMax)
-    var validated = false
-    var truncated = false
-    var errors = Vector.empty[String]
-    var classifiedKind: Option[String] = None
-    try {
-      val header = stream.readExact(512)
-      val sectorSize = parseHeader(header)
-      classifiedKind = classifyKind(ctx, hit.globalOffset, header, sectorSize, effectiveMax)
-      val targetSize = math.min(refineSize(ctx, hit.globalOffset, header, sectorSize, effectiveMax), effectiveMax)
-      val remaining = targetSize - stream.written
-      if (remaining > Int.MaxValue) // max_size configured past 2 GiB
-        throw new CarveErrors.Invalid("ole declared size exceeds 2 GiB carve limit")
-      if (remaining > 0) {
-        try stream.readExact(remaining.toInt)
-        catch {
-          case _: CarveErrors.Eof | _: CarveErrors.Truncated => () // tolerated (ole.rs:502-508)
-        }
+    val start = hit.globalOffset
+    val header = Scan.readPrefix(ctx, start, 512)
+    // max_size defaults to 512 MiB before the stream starts (ole.rs:463-468)
+    val (kind, end, validated, errors) =
+      if (effectiveMax < 512) (None, start, false, Seq("truncated output"))
+      else if (header.length < 512) (None, start + header.length, false, Seq("unexpected eof"))
+      else {
+        val sectorSize =
+          try parseHeader(header)
+          catch { case _: CarveErrors.Invalid => return None }
+        val kind = classifyKind(ctx, start, header, sectorSize, effectiveMax)
+        val size = math.min(refineSize(ctx, start, header, sectorSize, effectiveMax), effectiveMax)
+        // a body cut short by the evidence end is tolerated (ole.rs:502-508)
+        (kind, math.min(start + size, ctx.evidence.length), true, Nil)
       }
-      validated = true
-    } catch {
-      case e: CarveErrors.Truncated => truncated = true; errors :+= e.getMessage
-      case e: CarveErrors.Eof => truncated = true; errors :+= e.getMessage
-      case _: CarveErrors.Invalid => return None
-    }
-    val (size, md5Hex, shaHex) = stream.finish()
-    if (size < minSize) return None
-    var outType = fileType
-    var outExt = extension
-    classifiedKind.foreach { kind => outType = kind; outExt = kind }
+    val outType = kind.getOrElse(fileType)
     if (allowed.exists(a => !a.contains(outType))) return None
-    if (maxSize > 0 && size >= maxSize) {
-      truncated = true
-      if (!errors.exists(_.contains("max_size"))) errors :+= "max_size reached"
-    }
-    Some(CarveOps.carvedFile(ctx, outType, outExt, hit.globalOffset, size,
-      md5Hex, shaHex, validated, truncated, errors, hit.patternId)
-      .copy(path = Naming.relPath(outType, outExt, hit.globalOffset)))
+    val cut = maxSize > 0 && end - start >= maxSize
+    CarveOps.finish(ctx, hit, outType, kind.getOrElse(extension), start, end, minSize,
+      validated, truncated = !validated || cut,
+      if (cut) errors :+ "max_size reached" else errors)
   }
 
   /** Returns sector size; throws Invalid on a malformed header. */

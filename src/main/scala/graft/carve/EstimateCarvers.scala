@@ -1,11 +1,10 @@
 package graft.carve
 
 import graft.core.CarvedFile
-import java.security.MessageDigest
 import scala.collection.mutable
 
 /** Carvers that estimate the file end by walking container structures at
-  * planning time (no streaming hash until the extent is decided):
+  * planning time, then copy the decided extent with [[CarveOps.finish]]:
   * WEBM/MKV EBML, RAR4/RAR5 block chains, TIFF IFD traversal.
   */
 
@@ -59,17 +58,10 @@ final class WebmCarver(val maxSize: Long, val minSize: Long, val extension: Stri
       .getOrElse(if (maxSize > 0) hit.globalOffset + maxSize else ctx.evidence.length)
     if (maxSize > 0) totalEnd = math.min(totalEnd, hit.globalOffset + maxSize)
 
-    val relPath = Naming.relPath(fileType, extension, hit.globalOffset)
-    val md5 = MessageDigest.getInstance("MD5")
-    val sha = MessageDigest.getInstance("SHA-256")
-    val (written, eofTruncated) = CarveOps.writeRange(ctx, relPath, hit.globalOffset, totalEnd, md5, sha)
-    var truncated = eofTruncated
-    if (maxSize > 0 && totalEnd >= hit.globalOffset + maxSize) truncated = true
-    if (written < minSize) return None
-    Some(CarveOps.carvedFile(ctx, fileType, extension, hit.globalOffset, written,
-      Hex.lower(md5.digest()), Hex.lower(sha.digest()),
-      validated = !truncated && segmentSize.isDefined, truncated = truncated,
-      errors = Seq.empty, patternId = hit.patternId))
+    val cut = maxSize > 0 && totalEnd >= hit.globalOffset + maxSize
+    CarveOps.finish(ctx, hit, fileType, extension, hit.globalOffset, totalEnd, minSize,
+      validated = !cut && segmentSize.isDefined, truncated = cut, errors = Seq.empty,
+      eofInvalidates = true)
   }
 
   private def parseDocType(buf: Array[Byte]): Option[String] = {
@@ -150,18 +142,9 @@ final class RarCarver(val maxSize: Long, val minSize: Long, val extension: Strin
     val estimate =
       try estimateEnd(ctx, hit.globalOffset, errors)
       catch { case _: CarveErrors.Invalid | _: CarveErrors.Eof => return None }
-    val totalEnd = hit.globalOffset + estimate._1
-    val relPath = Naming.relPath(fileType, extension, hit.globalOffset)
-    val md5 = MessageDigest.getInstance("MD5")
-    val sha = MessageDigest.getInstance("SHA-256")
-    val (written, eofTruncated) = CarveOps.writeRange(ctx, relPath, hit.globalOffset, totalEnd, md5, sha)
-    val truncated = estimate._2 || eofTruncated
-    if (eofTruncated) errors += "eof before RAR end"
-    if (written < minSize) return None
-    Some(CarveOps.carvedFile(ctx, fileType, extension, hit.globalOffset, written,
-      Hex.lower(md5.digest()), Hex.lower(sha.digest()),
-      validated = !truncated, truncated = truncated, errors = errors.toSeq,
-      patternId = hit.patternId))
+    CarveOps.finish(ctx, hit, fileType, extension, hit.globalOffset, hit.globalOffset + estimate._1,
+      minSize, validated = !estimate._2, truncated = estimate._2, errors = errors.toSeq,
+      eofError = "eof before RAR end", eofInvalidates = true)
   }
 
   /** (endRelative, truncated) */
@@ -304,16 +287,9 @@ final class TiffCarver(val maxSize: Long, val minSize: Long, val extension: Stri
       truncated = true
       errors += "max_size reached before TIFF end"
     }
-    val relPath = Naming.relPath(fileType, extension, hit.globalOffset)
-    val md5 = MessageDigest.getInstance("MD5")
-    val sha = MessageDigest.getInstance("SHA-256")
-    val (written, eofTruncated) = CarveOps.writeRange(ctx, relPath, hit.globalOffset, totalEnd, md5, sha)
-    if (eofTruncated) { truncated = true; errors += "eof before TIFF end" }
-    if (written < minSize) return None
-    Some(CarveOps.carvedFile(ctx, fileType, extension, hit.globalOffset, written,
-      Hex.lower(md5.digest()), Hex.lower(sha.digest()),
+    CarveOps.finish(ctx, hit, fileType, extension, hit.globalOffset, totalEnd, minSize,
       validated = !truncated, truncated = truncated, errors = errors.toSeq,
-      patternId = hit.patternId))
+      eofError = "eof before TIFF end", eofInvalidates = true)
   }
 
   private def estimateEnd(ctx: ExtractionContext, start: Long, errors: mutable.ArrayBuffer[String]): (Long, Boolean) = {

@@ -1,25 +1,32 @@
 package graft.carve
 
 import graft.core.CarvedFile
-import java.security.MessageDigest
 
 /** Forward-scanning carvers: the end of the file is found by searching the
   * byte stream for a terminator (EOI, %%EOF, next-header, stream-end
-  * magic, closing tag, configured footer), with a (patternLen−1)-byte
-  * carry across 64 KiB read buffers so terminators spanning buffer
-  * boundaries are found. Flag/error semantics ported per carver.
+  * magic, closing tag, configured footer). Every such search is one call
+  * of [[Scan.search]], and every carve ends in [[CarveOps.finish]].
+  * Flag/error semantics ported per carver.
   */
 object Scan {
   final val BufSize = 64 * 1024
 
-  def findPattern(hay: Array[Byte], hayLen: Int, needle: Array[Byte], from: Int = 0): Int = {
+  /** First index >= `from` where `needle` occurs in hay[0, hayLen); with
+    * `ignoreCase`, ASCII letters of hay match a lower-case needle.
+    */
+  def findPattern(hay: Array[Byte], hayLen: Int, needle: Array[Byte], from: Int = 0,
+      ignoreCase: Boolean = false): Int = {
     if (needle.isEmpty || hayLen < needle.length) return -1
+    def at(i: Int): Byte = {
+      val b = hay(i)
+      if (ignoreCase && b >= 'A' && b <= 'Z') (b + 32).toByte else b
+    }
     val first = needle(0)
     var i = from
     while (i + needle.length <= hayLen) {
-      if (hay(i) == first) {
+      if (at(i) == first) {
         var j = 1
-        while (j < needle.length && hay(i + j) == needle(j)) j += 1
+        while (j < needle.length && at(i + j) == needle(j)) j += 1
         if (j == needle.length) return i
       }
       i += 1
@@ -41,36 +48,80 @@ object Scan {
     java.util.Arrays.copyOf(buf, ctx.evidence.readFully(offset, buf, 0, len))
   }
 
-  /** Hash-and-finish helper shared by the scan carvers: ranged copy of the
-    * decided extent, min-size gate, record assembly.
+  /** The end a carve of at most `maxSize` bytes (0 = unlimited) may reach. */
+  def maxEnd(start: Long, maxSize: Long): Long = if (maxSize > 0) start + maxSize else Long.MaxValue
+
+  /** How a [[search]] ended: at the offset `find` returned, at the end of
+    * the evidence, or at `maxEnd`.
     */
-  def finishRange(
-      handler: CarveHandler,
-      ctx: ExtractionContext,
-      hit: CarveHit,
-      start: Long,
-      end: Long,
-      minSize: Long,
-      validated: Boolean,
-      truncated: Boolean,
-      errors: Seq[String],
-      eofError: Option[String] = None,
-      validatedOnEof: Option[Boolean] = None): Option[CarvedFile] = {
-    val relPath = Naming.relPath(handler.fileType, handler.extension, start)
-    val md5 = MessageDigest.getInstance("MD5")
-    val sha = MessageDigest.getInstance("SHA-256")
-    val (written, eofTruncated) = CarveOps.writeRange(ctx, relPath, start, end, md5, sha)
-    if (written < minSize) return None
-    var errs = errors
-    var trunc = truncated
-    var valid = validated
-    if (eofTruncated) {
-      trunc = true
-      eofError.foreach(e => if (!errs.exists(_.contains("eof"))) errs = errs :+ e)
-      validatedOnEof.foreach(v => valid = v)
+  sealed trait Stop { def at: Long }
+  final case class Found(at: Long) extends Stop
+  final case class AtEof(at: Long) extends Stop
+  final case class AtMax(at: Long) extends Stop
+
+  /** The one forward terminator search. Reads [from, maxEnd) through one
+    * reused buffer; the last `carryLen` bytes of each window stay in front
+    * of the next read, so a terminator split across two reads is seen
+    * whole. `find(window, len, windowStart)` inspects window[0, len),
+    * whose first byte is at global offset `windowStart`, and returns the
+    * offset it found or -1 to read on.
+    */
+  def search(ctx: ExtractionContext, from: Long, maxEnd: Long, carryLen: Int)(
+      find: (Array[Byte], Int, Long) => Long): Stop = {
+    val buf = new Array[Byte](carryLen + BufSize)
+    var offset = from
+    var carried = 0
+    while (offset < maxEnd) {
+      val n = ctx.evidence.readAt(offset, buf, carried, math.min(maxEnd - offset, BufSize.toLong).toInt)
+      if (n == 0) return AtEof(offset)
+      val len = carried + n
+      val found = find(buf, len, offset - carried)
+      if (found >= 0) return Found(found)
+      offset += n
+      carried = math.min(carryLen, len)
+      System.arraycopy(buf, len - carried, buf, 0, carried)
     }
-    Some(CarveOps.carvedFile(ctx, handler.fileType, handler.extension, start, written,
-      Hex.lower(md5.digest()), Hex.lower(sha.digest()), valid, trunc, errs, hit.patternId))
+    AtMax(maxEnd)
+  }
+
+  /** A `find` for the first `needle`, returning the offset just past it. */
+  def through(needle: Array[Byte], ignoreCase: Boolean = false): (Array[Byte], Int, Long) => Long =
+    (window, len, at) => {
+      val pos = findPattern(window, len, needle, 0, ignoreCase)
+      if (pos < 0) -1L else at + pos + needle.length
+    }
+
+  /** Tail of the carvers that end at a terminator (jpeg, pdf, fb2,
+    * footer): validated when the search found it, otherwise truncated
+    * with the carver's "eof before …" or "max_size reached before …".
+    */
+  def finishAtTerminator(handler: CarveHandler, ctx: ExtractionContext, hit: CarveHit,
+      minSize: Long, stop: Stop, eofError: String, maxError: String): Option[CarvedFile] = {
+    val errors = stop match {
+      case Found(_) => Nil
+      case AtEof(_) => Seq(eofError)
+      case AtMax(_) => Seq(maxError)
+    }
+    CarveOps.finish(ctx, hit, handler.fileType, handler.extension, hit.globalOffset, stop.at, minSize,
+      validated = errors.isEmpty, truncated = errors.nonEmpty, errors = errors)
+  }
+
+  /** Tail of the carve-until-pattern carvers (gzip, bzip2, xz): validated
+    * when the search found the end, or at EOF when `eofValidates`; an end
+    * at `maxEnd` is flagged with `maxError` (also when a terminator ends
+    * exactly there).
+    */
+  def finishUntil(handler: CarveHandler, ctx: ExtractionContext, hit: CarveHit,
+      minSize: Long, maxSize: Long, stop: Stop, eofValidates: Boolean,
+      maxError: String, eofError: String): Option[CarvedFile] = {
+    val validated = stop match {
+      case Found(_) => true
+      case AtEof(_) => eofValidates
+      case AtMax(_) => false
+    }
+    val cut = maxSize > 0 && stop.at >= maxEnd(hit.globalOffset, maxSize)
+    CarveOps.finish(ctx, hit, handler.fileType, handler.extension, hit.globalOffset, stop.at, minSize,
+      validated, truncated = cut, errors = if (cut) Seq(maxError) else Nil, eofError = eofError)
   }
 }
 
@@ -80,40 +131,12 @@ object Scan {
 final class JpegCarver(val maxSize: Long, val minSize: Long, val extension: String = "jpg")
     extends CarveHandler {
   override def fileType: String = "jpeg"
+  private val Eoi = Array(0xff, 0xd9).map(_.toByte)
 
   override def processHit(hit: CarveHit, ctx: ExtractionContext): Option[CarvedFile] = {
-    var offset = hit.globalOffset
-    var written = 0L
-    var validated = false
-    var truncated = false
-    var errors = Vector.empty[String]
-    var prevFF = false
-    val buf = new Array[Byte](Scan.BufSize)
-    var done = false
-    while (!done) {
-      if (maxSize > 0 && written >= maxSize) {
-        truncated = true; errors :+= "max_size reached before EOI"; done = true
-      } else {
-        val want = if (maxSize > 0) math.min(maxSize - written, Scan.BufSize.toLong).toInt else Scan.BufSize
-        val n = ctx.evidence.readAt(offset, buf, 0, want)
-        if (n == 0) {
-          truncated = true; errors :+= "eof before EOI"; done = true
-        } else {
-          var writeLen = n
-          var i = 0
-          var found = false
-          while (!found && i < n) {
-            if (prevFF && (buf(i) & 0xff) == 0xd9) { writeLen = i + 1; validated = true; found = true }
-            else { prevFF = (buf(i) & 0xff) == 0xff; i += 1 }
-          }
-          written += writeLen
-          offset += writeLen
-          if (validated || writeLen < n) done = true
-        }
-      }
-    }
-    Scan.finishRange(this, ctx, hit, hit.globalOffset, hit.globalOffset + written, minSize,
-      validated, truncated, errors)
+    val stop = Scan.search(ctx, hit.globalOffset, Scan.maxEnd(hit.globalOffset, maxSize),
+      Eoi.length - 1)(Scan.through(Eoi))
+    Scan.finishAtTerminator(this, ctx, hit, minSize, stop, "eof before EOI", "max_size reached before EOI")
   }
 }
 
@@ -129,114 +152,16 @@ final class PdfCarver(val maxSize: Long, val minSize: Long, val extension: Strin
   override def processHit(hit: CarveHit, ctx: ExtractionContext): Option[CarvedFile] = {
     val head = Scan.readPrefix(ctx, hit.globalOffset, Header.length)
     if (head.length >= Header.length && !head.take(Header.length).sameElements(Header)) return None
-    var offset = hit.globalOffset
-    var written = 0L
-    var validated = false
-    var truncated = false
-    var errors = Vector.empty[String]
-    var carry = Array.emptyByteArray
-    var done = false
-    while (!done) {
-      if (maxSize > 0 && written >= maxSize) {
-        truncated = true; errors :+= "max_size reached before EOF"; done = true
-      } else {
-        val want = if (maxSize > 0) math.min(maxSize - written, Scan.BufSize.toLong).toInt else Scan.BufSize
-        val buf = new Array[Byte](want)
-        val n = ctx.evidence.readAt(offset, buf, 0, want)
-        if (n == 0) {
-          truncated = true; errors :+= "eof before %%EOF"; done = true
-        } else {
-          val search = carry ++ buf.take(n)
-          val pos = Scan.findPattern(search, search.length, Eof)
-          if (pos >= 0) {
-            val writeLen = math.min(pos + Eof.length - carry.length, n)
-            if (writeLen > 0) written += writeLen
-            validated = true
-            done = true
-          } else {
-            written += n
-            offset += n
-            carry = if (n >= Eof.length - 1) buf.slice(n - (Eof.length - 1), n) else buf.take(n)
-          }
-        }
-      }
-    }
-    if (validated) {
+    val stop = Scan.search(ctx, hit.globalOffset, Scan.maxEnd(hit.globalOffset, maxSize),
+      Eof.length - 1)(Scan.through(Eof)) match {
       // trailing \n or \r\n is included (pdf.rs:128-151)
-      ctx.evidence.readExactAt(hit.globalOffset + written, 1).foreach { b1 =>
-        if (b1(0) == '\n'.toByte) written += 1
-        else if (b1(0) == '\r'.toByte) {
-          written += 1
-          ctx.evidence.readExactAt(hit.globalOffset + written, 1).foreach { b2 =>
-            if (b2(0) == '\n'.toByte) written += 1
-          }
-        }
-      }
+      case Scan.Found(end) =>
+        val next = new String(Scan.readPrefix(ctx, end, 2), "ISO-8859-1")
+        Scan.Found(end + (if (next.startsWith("\r\n")) 2
+          else if (next.startsWith("\n") || next.startsWith("\r")) 1 else 0))
+      case other => other
     }
-    Scan.finishRange(this, ctx, hit, hit.globalOffset, hit.globalOffset + written, minSize,
-      validated, truncated, errors)
-  }
-}
-
-/** Shared carve-until-pattern scaffold for gzip/bzip2/xz/eml — scans
-  * forward from `searchFrom` for an end decided by `onBuffer`, then
-  * ranged-copies. Subclasses differ in header validation and end rules.
-  */
-abstract class UntilPatternCarver extends CarveHandler {
-  def maxSize: Long
-  def minSize: Long
-
-  /** (endOffset, validated) or null to keep scanning. */
-  final case class End(offset: Long, validated: Boolean)
-
-  protected def carryLen: Int
-
-  /** Inspect one search window (carry ++ fresh). bufStartGlobal is the
-    * global offset of search(0). Return an End or None.
-    */
-  protected def findEnd(ctx: ExtractionContext, search: Array[Byte], searchLen: Int,
-      bufStartGlobal: Long, hitOffset: Long): Option[End]
-
-  /** End decision at evidence EOF: Some(end, validated) or None for
-    * "fall through to max_end".
-    */
-  protected def endAtEof(offset: Long): Option[End] = Some(End(offset, validated = false))
-
-  protected def maxSizeError: String
-  protected def eofWriteError: Option[String]
-
-  /** Run the scan loop from searchStart; returns (end, validated, errors, truncated). */
-  protected final def scanForEnd(ctx: ExtractionContext, hit: CarveHit, searchStart: Long)
-      : (Long, Boolean, Seq[String], Boolean) = {
-    val maxEnd = if (maxSize > 0) hit.globalOffset + maxSize else Long.MaxValue
-    var offset = searchStart
-    var carry = Array.emptyByteArray
-    var result: Option[End] = None
-    var sawEof = false
-    while (result.isEmpty && !sawEof && offset < maxEnd) {
-      val want = math.min(maxEnd - offset, Scan.BufSize.toLong).toInt
-      val buf = new Array[Byte](want)
-      val n = ctx.evidence.readAt(offset, buf, 0, want)
-      if (n == 0) {
-        sawEof = true
-        result = endAtEof(offset)
-      } else {
-        val search = carry ++ buf.take(n)
-        result = findEnd(ctx, search, search.length, offset - carry.length, hit.globalOffset)
-        if (result.isEmpty) {
-          offset += n
-          carry = if (n >= carryLen) buf.slice(n - carryLen, n) else buf.take(n)
-        }
-      }
-    }
-    var errors = Vector.empty[String]
-    var truncated = false
-    val (end, validated) = result.map(e => (e.offset, e.validated)).getOrElse((maxEnd, false))
-    if (maxSize > 0 && end >= maxEnd) {
-      truncated = true
-      errors :+= maxSizeError
-    }
-    (end, validated, errors, truncated)
+    Scan.finishAtTerminator(this, ctx, hit, minSize, stop, "eof before %%EOF", "max_size reached before EOF")
   }
 }
 
@@ -245,32 +170,21 @@ abstract class UntilPatternCarver extends CarveHandler {
   * reference src/carve/gzip.rs:42-217).
   */
 final class GzipCarver(val maxSize: Long, val minSize: Long, val extension: String = "gz")
-    extends UntilPatternCarver {
+    extends CarveHandler {
   override def fileType: String = "gzip"
   private val Magic = Array(0x1f, 0x8b, 0x08).map(_.toByte)
-  override protected def carryLen: Int = Magic.length - 1
-  override protected def maxSizeError: String = "max_size reached before gzip end"
-  override protected def eofWriteError: Option[String] = Some("eof before gzip end")
-  override protected def endAtEof(offset: Long): Option[End] = Some(End(offset, validated = true))
-
-  override protected def findEnd(ctx: ExtractionContext, search: Array[Byte], searchLen: Int,
-      bufStartGlobal: Long, hitOffset: Long): Option[End] = {
-    var from = 0
-    while (true) {
-      val pos = Scan.findPattern(search, searchLen, Magic, from)
-      if (pos < 0) return None
-      val gzipOffset = bufStartGlobal + pos
-      if (gzipOffset > hitOffset) return Some(End(gzipOffset, validated = true))
-      from = pos + 1
-    }
-    None
-  }
 
   override def processHit(hit: CarveHit, ctx: ExtractionContext): Option[CarvedFile] = {
     val headerLen = parseHeader(ctx, hit.globalOffset).getOrElse(return None)
-    val (end, validated, errors, truncated) = scanForEnd(ctx, hit, hit.globalOffset + headerLen)
-    Scan.finishRange(this, ctx, hit, hit.globalOffset, end, minSize, validated, truncated,
-      errors, eofError = eofWriteError)
+    // the search starts past this member's header, so the first magic it
+    // sees is the next member's
+    val stop = Scan.search(ctx, hit.globalOffset + headerLen, Scan.maxEnd(hit.globalOffset, maxSize),
+      Magic.length - 1) { (window, len, at) =>
+      val pos = Scan.findPattern(window, len, Magic)
+      if (pos < 0) -1L else at + pos
+    }
+    Scan.finishUntil(this, ctx, hit, minSize, maxSize, stop, eofValidates = true,
+      "max_size reached before gzip end", "eof before gzip end")
   }
 
   /** Header length incl. optional fields (gzip.rs:171-217). */
@@ -305,28 +219,20 @@ final class GzipCarver(val maxSize: Long, val minSize: Long, val extension: Stri
   * (reference src/carve/bzip2.rs:42-143).
   */
 final class Bzip2Carver(val maxSize: Long, val minSize: Long, val extension: String = "bz2")
-    extends UntilPatternCarver {
+    extends CarveHandler {
   override def fileType: String = "bzip2"
   private val Magic = "BZh".getBytes("ISO-8859-1")
   private val EndMarker = Hex.decode("177245385090")
-  override protected def carryLen: Int = EndMarker.length - 1
-  override protected def maxSizeError: String = "max_size reached before bzip2 end"
-  override protected def eofWriteError: Option[String] = Some("eof before bzip2 end")
-
-  override protected def findEnd(ctx: ExtractionContext, search: Array[Byte], searchLen: Int,
-      bufStartGlobal: Long, hitOffset: Long): Option[End] = {
-    val pos = Scan.findPattern(search, searchLen, EndMarker)
-    if (pos < 0) None else Some(End(bufStartGlobal + pos + EndMarker.length, validated = true))
-  }
 
   override def processHit(hit: CarveHit, ctx: ExtractionContext): Option[CarvedFile] = {
     val header = ctx.evidence.readExactAt(hit.globalOffset, 4).getOrElse(return None)
     if (!header.take(3).sameElements(Magic)) return None
     val level = header(3) & 0xff
     if (level < '1'.toInt || level > '9'.toInt) return None
-    val (end, validated, errors, truncated) = scanForEnd(ctx, hit, hit.globalOffset + 4)
-    Scan.finishRange(this, ctx, hit, hit.globalOffset, end, minSize, validated, truncated,
-      errors, eofError = eofWriteError)
+    val stop = Scan.search(ctx, hit.globalOffset + 4, Scan.maxEnd(hit.globalOffset, maxSize),
+      EndMarker.length - 1)(Scan.through(EndMarker))
+    Scan.finishUntil(this, ctx, hit, minSize, maxSize, stop, eofValidates = false,
+      "max_size reached before bzip2 end", "eof before bzip2 end")
   }
 }
 
@@ -334,45 +240,34 @@ final class Bzip2Carver(val maxSize: Long, val minSize: Long, val extension: Str
   * CRC verifies (reference src/carve/xz.rs:42-189).
   */
 final class XzCarver(val maxSize: Long, val minSize: Long, val extension: String = "xz")
-    extends UntilPatternCarver {
+    extends CarveHandler {
   override def fileType: String = "xz"
   private val Magic = Hex.decode("FD377A585A00")
   private val FooterMagic = Array('Y'.toByte, 'Z'.toByte)
-  override protected def carryLen: Int = FooterMagic.length - 1
-  override protected def maxSizeError: String = "max_size reached before xz end"
-  override protected def eofWriteError: Option[String] = Some("eof before xz end")
-  override protected def endAtEof(offset: Long): Option[End] = None
-
-  override protected def findEnd(ctx: ExtractionContext, search: Array[Byte], searchLen: Int,
-      bufStartGlobal: Long, hitOffset: Long): Option[End] = {
-    var from = 0
-    var found: Option[End] = None
-    while (found.isEmpty) {
-      val pos = Scan.findPattern(search, searchLen, FooterMagic, from)
-      if (pos < 0) return None
-      val footerEnd = bufStartGlobal + pos + 2
-      if (footerEnd >= hitOffset + 12) {
-        val footerStart = footerEnd - 12
-        if (footerStart > hitOffset) {
-          ctx.evidence.readExactAt(footerStart, 12).foreach { footer =>
-            if (footer(10) == 'Y'.toByte && footer(11) == 'Z'.toByte &&
-                Bin.leU32(footer, 0) == Crc32.of(footer, 4, 6))
-              found = Some(End(footerEnd, validated = true))
-          }
-        }
-      }
-      if (found.isEmpty) from = pos + 1
-    }
-    found
-  }
 
   override def processHit(hit: CarveHit, ctx: ExtractionContext): Option[CarvedFile] = {
     val header = ctx.evidence.readExactAt(hit.globalOffset, 12).getOrElse(return None)
     if (!header.take(6).sameElements(Magic)) return None
     if (Bin.leU32(header, 8) != Crc32.of(header, 6, 2)) return None
-    val (end, validated, errors, truncated) = scanForEnd(ctx, hit, hit.globalOffset + 12)
-    Scan.finishRange(this, ctx, hit, hit.globalOffset, end, minSize, validated, truncated,
-      errors, eofError = eofWriteError)
+    val maxEnd = Scan.maxEnd(hit.globalOffset, maxSize)
+    // the search starts past the 12-byte header, so every footer it finds
+    // lies wholly after the hit
+    val stop = Scan.search(ctx, hit.globalOffset + 12, maxEnd, FooterMagic.length - 1) { (window, len, at) =>
+      var end = -1L
+      var pos = Scan.findPattern(window, len, FooterMagic)
+      while (end < 0 && pos >= 0) {
+        val footerEnd = at + pos + 2
+        if (ctx.evidence.readExactAt(footerEnd - 12, 12).exists(f => Bin.leU32(f, 0) == Crc32.of(f, 4, 6)))
+          end = footerEnd
+        else pos = Scan.findPattern(window, len, FooterMagic, pos + 1)
+      }
+      end
+    } match {
+      case Scan.AtEof(_) => Scan.AtMax(maxEnd) // no footer: carve on to max_end (xz.rs)
+      case other => other
+    }
+    Scan.finishUntil(this, ctx, hit, minSize, maxSize, stop, eofValidates = false,
+      "max_size reached before xz end", "eof before xz end")
   }
 }
 
@@ -389,24 +284,12 @@ object Crc32 {
   * `\nFrom ` or EOF (reference src/carve/eml.rs:25-208).
   */
 final class EmlCarver(val maxSize: Long, val minSize: Long, val extension: String = "eml")
-    extends UntilPatternCarver {
+    extends CarveHandler {
   override def fileType: String = "eml"
   private val Markers = Seq("From:", "To:", "Subject:", "Date:", "Message-ID:", "MIME-Version:")
     .map(_.getBytes("ISO-8859-1"))
   private val Boundary = "\nFrom ".getBytes("ISO-8859-1")
   private val Templates = Seq("%s", "%d", "{}", "<%s>", "${").map(_.getBytes("ISO-8859-1"))
-  override protected def carryLen: Int = Boundary.length - 1
-  override protected def maxSizeError: String = "" // eml records no max error
-  override protected def eofWriteError: Option[String] = None
-
-  override protected def findEnd(ctx: ExtractionContext, search: Array[Byte], searchLen: Int,
-      bufStartGlobal: Long, hitOffset: Long): Option[End] = {
-    val pos = Scan.findPattern(search, searchLen, Boundary)
-    if (pos >= 0 && bufStartGlobal + pos > hitOffset) Some(End(bufStartGlobal + pos, validated = true))
-    else None
-  }
-
-  override protected def endAtEof(offset: Long): Option[End] = Some(End(offset, validated = true))
 
   override def processHit(hit: CarveHit, ctx: ExtractionContext): Option[CarvedFile] = {
     val head = Scan.readPrefix(ctx, hit.globalOffset, 2048)
@@ -416,13 +299,17 @@ final class EmlCarver(val maxSize: Long, val minSize: Long, val extension: Strin
     if (Templates.exists(t => Scan.containsPattern(head, t))) return None
     if (!head.contains('@'.toByte)) return None
     if (!head.contains('\n'.toByte)) return None
-    val (end, _, _, truncated) = scanForEnd(ctx, hit, hit.globalOffset)
+    val stop = Scan.search(ctx, hit.globalOffset, Scan.maxEnd(hit.globalOffset, maxSize),
+      Boundary.length - 1) { (window, len, at) =>
+      val pos = Scan.findPattern(window, len, Boundary)
+      if (pos >= 0 && at + pos > hit.globalOffset) at + pos else -1L
+    }
     // eml: validated == no EOF during the ranged copy; no error strings —
     // but a max_size cut IS reported as truncated (dropping the flag
     // painted a cut-off message as intact)
-    Scan.finishRange(this, ctx, hit, hit.globalOffset, end, minSize,
-      validated = true, truncated = truncated, errors = Seq.empty,
-      eofError = None, validatedOnEof = Some(false))
+    CarveOps.finish(ctx, hit, fileType, extension, hit.globalOffset, stop.at, minSize,
+      validated = true, truncated = stop.isInstanceOf[Scan.AtMax], errors = Nil,
+      eofInvalidates = true)
   }
 }
 
@@ -443,41 +330,9 @@ final class Fb2Carver(val maxSize: Long, val minSize: Long, val extension: Strin
     if (preview.length < Header.length || !preview.take(Header.length).sameElements(Header)) return None
     val lower = Scan.toLowerAscii(preview)
     if (!Scan.containsPattern(lower, TagLower) && !Scan.containsPattern(lower, NsLower)) return None
-
-    var offset = hit.globalOffset
-    var written = 0L
-    var validated = false
-    var truncated = false
-    var errors = Vector.empty[String]
-    var carry = Array.emptyByteArray
-    var done = false
-    while (!done) {
-      if (maxSize > 0 && written >= maxSize) {
-        truncated = true; errors :+= "max_size reached before fb2 end"; done = true
-      } else {
-        val want = if (maxSize > 0) math.min(maxSize - written, Scan.BufSize.toLong).toInt else Scan.BufSize
-        val buf = new Array[Byte](want)
-        val n = ctx.evidence.readAt(offset, buf, 0, want)
-        if (n == 0) {
-          truncated = true; errors :+= "eof before fb2 end"; done = true
-        } else {
-          val search = Scan.toLowerAscii(carry ++ buf.take(n))
-          val pos = Scan.findPattern(search, search.length, EndLower)
-          if (pos >= 0) {
-            val writeLen = math.min(pos + EndLower.length - carry.length, n)
-            if (writeLen > 0) written += writeLen
-            validated = true
-            done = true
-          } else {
-            written += n
-            offset += n
-            carry = if (n >= EndLower.length - 1) buf.slice(n - (EndLower.length - 1), n) else buf.take(n)
-          }
-        }
-      }
-    }
-    Scan.finishRange(this, ctx, hit, hit.globalOffset, hit.globalOffset + written, minSize,
-      validated, truncated, errors)
+    val stop = Scan.search(ctx, hit.globalOffset, Scan.maxEnd(hit.globalOffset, maxSize),
+      EndLower.length - 1)(Scan.through(EndLower, ignoreCase = true))
+    Scan.finishAtTerminator(this, ctx, hit, minSize, stop, "eof before fb2 end", "max_size reached before fb2 end")
   }
 }
 
@@ -495,57 +350,23 @@ final class FooterCarver(
   private val maxFooterLen = if (footerPatterns.isEmpty) 0 else footerPatterns.map(_.length).max
 
   override def processHit(hit: CarveHit, ctx: ExtractionContext): Option[CarvedFile] = {
-    var offset = hit.globalOffset
-    var written = 0L
-    var validated = false
-    var truncated = false
-    var errors = Vector.empty[String]
-    var carry = Array.emptyByteArray
-    var done = false
-    while (!done) {
-      if (maxSize > 0 && written >= maxSize) {
-        truncated = true; errors :+= "max_size reached before footer"; done = true
-      } else {
-        val want = if (maxSize > 0) math.min(maxSize - written, Scan.BufSize.toLong).toInt else Scan.BufSize
-        val buf = new Array[Byte](want)
-        val n = ctx.evidence.readAt(offset, buf, 0, want)
-        if (n == 0) {
-          truncated = true; errors :+= "eof before footer"; done = true
-        } else {
-          if (written == 0 && headerPatterns.nonEmpty) {
-            // gate on a LOOPED prefix read — a legally short first readAt
-            // (EWF: one chunk per call) must not skip or fail the check
-            val gateLen = headerPatterns.map(_.length).max
-            val head = if (n >= gateLen) buf.take(gateLen)
-              else Scan.readPrefix(ctx, offset, gateLen)
-            if (!headerPatterns.exists(p => p.nonEmpty && head.length >= p.length &&
-                java.util.Arrays.equals(head.take(p.length), p))) return None
-          }
-          val search = carry ++ buf.take(n)
-          var best = -1
-          var bestLen = 0
-          footerPatterns.foreach { pat =>
-            val pos = Scan.findPattern(search, search.length, pat)
-            if (pos >= 0 && (best < 0 || pos < best)) { best = pos; bestLen = pat.length }
-          }
-          if (best >= 0) {
-            val writeLen = math.min(best + bestLen - carry.length, n)
-            if (writeLen > 0) written += writeLen
-            validated = true
-            done = true
-          } else {
-            written += n
-            offset += n
-            carry =
-              if (maxFooterLen > 1) {
-                val keep = maxFooterLen - 1
-                if (n >= keep) buf.slice(n - keep, n) else buf.take(n)
-              } else Array.emptyByteArray
-          }
-        }
-      }
+    if (headerPatterns.nonEmpty) {
+      // gate on a looped prefix read — a legally short readAt (EWF: one
+      // chunk per call) must not skip or fail the check
+      val head = Scan.readPrefix(ctx, hit.globalOffset, headerPatterns.map(_.length).max)
+      if (!headerPatterns.exists(p => p.nonEmpty && head.length >= p.length &&
+          java.util.Arrays.equals(head.take(p.length), p))) return None
     }
-    Scan.finishRange(this, ctx, hit, hit.globalOffset, hit.globalOffset + written, minSize,
-      validated, truncated, errors)
+    val stop = Scan.search(ctx, hit.globalOffset, Scan.maxEnd(hit.globalOffset, maxSize),
+      math.max(maxFooterLen - 1, 0)) { (window, len, at) =>
+      var best = -1
+      var bestLen = 0
+      footerPatterns.foreach { pat =>
+        val pos = Scan.findPattern(window, len, pat)
+        if (pos >= 0 && (best < 0 || pos < best)) { best = pos; bestLen = pat.length }
+      }
+      if (best < 0) -1L else at + best + bestLen
+    }
+    Scan.finishAtTerminator(this, ctx, hit, minSize, stop, "eof before footer", "max_size reached before footer")
   }
 }

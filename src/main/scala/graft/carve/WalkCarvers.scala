@@ -1,7 +1,6 @@
 package graft.carve
 
 import graft.core.CarvedFile
-import java.security.MessageDigest
 
 /** Structure-walking carvers: tar block walk, ogg page walk, ico directory
   * validation, ISO-BMFF (mp4/mov) box walk.
@@ -235,17 +234,10 @@ abstract class BmffCarver extends CarveHandler {
       }
     }
     if (!seenFtyp || !seenMoov) return None
-    var totalEnd = lastGood
-    if (maxSize > 0 && totalEnd - hit.globalOffset > maxSize) totalEnd = hit.globalOffset + maxSize
-    val relPath = Naming.relPath(fileType, extension, hit.globalOffset)
-    val md5 = MessageDigest.getInstance("MD5")
-    val sha = MessageDigest.getInstance("SHA-256")
-    val (written, eofTruncated) = CarveOps.writeRange(ctx, relPath, hit.globalOffset, totalEnd, md5, sha)
-    if (eofTruncated) { truncated = true; errors :+= s"eof before $labelUpper end" }
-    if (written < minSize) return None
-    Some(CarveOps.carvedFile(ctx, fileType, extension, hit.globalOffset, written,
-      Hex.lower(md5.digest()), Hex.lower(sha.digest()),
-      validated = !truncated, truncated = truncated, errors = errors, patternId = hit.patternId))
+    CarveOps.finish(ctx, hit, fileType, extension, hit.globalOffset,
+      math.min(lastGood, Scan.maxEnd(hit.globalOffset, maxSize)), minSize,
+      validated = !truncated, truncated = truncated, errors = errors,
+      eofError = s"eof before $labelUpper end", eofInvalidates = true)
   }
 }
 

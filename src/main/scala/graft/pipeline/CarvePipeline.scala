@@ -159,7 +159,7 @@ object CarvePipeline {
           else Some(c.copy(length = math.min(c.length, room), validLength = math.min(c.validLength, room)))
         }
     }
-    cfg.maxChunks.foreach(n => chunks = chunks.limit(n.toInt))
+    cfg.maxChunks.foreach(n => chunks = chunks.limit(math.min(n, Int.MaxValue).toInt))
 
     val scanner = ChunkScanner(cfg, runId, enableStrings, enableEntropy)
 
@@ -234,21 +234,20 @@ object CarvePipeline {
         iter.flatMap { h =>
           val (patId, ftId) = patternIdOf(h.fileTypeId)
           registry.get(ftId).flatMap { handler =>
-            try {
-              val result = handler.processHit(CarveHit(h.globalOffset, ftId, patId), ctx)
-              // classifying containers (zip→docx, ole→doc, ...) report a
-              // different type than they streamed under — mirror the
-              // reference's post-carve rename (zip.rs:128-141)
-              for (w <- writer; c <- result)
-                w.rename(Naming.relPath(handler.fileType, handler.extension, c.globalStart), c.path)
-              result.map(h -> _)
-            } catch { case _: Exception => carveErrors.add(1L); None }
+            // each hit streams a fresh payload file; the file of a hit that
+            // is dropped or fails is deleted, so every payload has a row
+            writer.foreach(_.close())
+            val result =
+              try handler.processHit(CarveHit(h.globalOffset, ftId, patId), ctx)
+              catch { case _: Exception => carveErrors.add(1L); None }
+            if (result.isEmpty) writer.foreach(_.discard())
+            result.map(h -> _)
           }
         }
       }
     // persist: the carve table feeds multiple actions (output write,
     // summaries, caller counts) — re-running it would double-fire the
-    // carveErrors accumulator and redo payload writes/renames. Rows are
+    // carveErrors accumulator and redo payload writes. Rows are
     // metadata only (no payload bytes), so the cache is small.
     val carved = (cfg.maxFiles match {
       case None => hitRows.mapPartitions(carveHits(payloadDir)(_).map(_._2))
@@ -257,7 +256,7 @@ object CarvePipeline {
         // offset order, on any partitioning: carve without payloads,
         // choose, then carve the chosen hits again with their payloads.
         val chosen = hitRows.mapPartitions(carveHits(None))
-          .orderBy($"_2.globalStart", $"_2.path", $"_1.patternId").limit(n.toInt)
+          .orderBy($"_2.globalStart", $"_2.path", $"_1.patternId").limit(math.min(n, Int.MaxValue).toInt)
         if (payloadDir.isEmpty) chosen.map(_._2)
         else chosen.map(_._1).mapPartitions(carveHits(payloadDir)(_).map(_._2))
     }).persist(StorageLevel.MEMORY_AND_DISK)

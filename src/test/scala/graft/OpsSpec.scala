@@ -430,6 +430,34 @@ class OpsSpec extends AnyFunSuite with BeforeAndAfterAll {
       Map("GRAFT_CHUNK_MIB" -> "2048", "GRAFT_RUN_ID" -> "bigchunk"), stopSession = false))
   }
 
+  test("file and chunk budgets past Int.MaxValue carve everything; negative budgets are rejected") {
+    spark
+    val jpeg = FixtureBytes.jpeg()
+    val png = FixtureBytes.png()
+    val evidence = new Array[Byte](12288)
+    System.arraycopy(jpeg, 0, evidence, 0, jpeg.length)
+    System.arraycopy(png, 0, evidence, 6000, png.length)
+    val img = writeImage(evidence)
+    val yml = writeToggleYml("chunk_size: 4096\noverlap_bytes: 512")
+    def carvedSet(env: Map[String, String]): Set[(String, Long, String)] = {
+      val out = tmp()
+      Carve.runJob(Array(img.toString, out, yml.toString), env + ("GRAFT_RUN_ID" -> "budget"),
+        stopSession = false)
+      spark.read.parquet(s"$out/files")
+        .select("file_type", "global_start", "sha256").collect()
+        .map(r => (r.getString(0), r.getLong(1), r.getString(2))).toSet
+    }
+    val all = carvedSet(Map.empty)
+    assert(all.map(_._1) == Set("jpeg", "png"))
+    // 4294967296 narrowed by toInt is 0, 2147483648 is negative
+    for (budget <- Seq("4294967296", "2147483648"))
+      assert(carvedSet(Map("GRAFT_MAX_FILES" -> budget, "GRAFT_MAX_CHUNKS" -> budget)) == all, budget)
+    for (key <- Seq("GRAFT_MAX_FILES", "GRAFT_MAX_CHUNKS")) {
+      val e = intercept[IllegalArgumentException](carvedSet(Map(key -> "-1")))
+      assert(e.getMessage.contains("negative budget"), e.getMessage)
+    }
+  }
+
   test("Carve main writes a checkpoint at a cap stop; resume completes to byte parity") {
     spark
     val jpeg = FixtureBytes.jpeg()

@@ -1,6 +1,6 @@
 package graft
 
-import graft.carve.EngineConfig
+import graft.carve.{EngineConfig, FileTypeConfig, HeaderPattern}
 import graft.fixtures.FixtureBytes
 import graft.evidence.InMemoryRef
 import graft.pipeline.CarvePipeline
@@ -65,6 +65,38 @@ class PipelineSpec extends AnyFunSuite with BeforeAndAfterAll {
     // classification flowed through the distributed path
     assert(carved.values.exists(_.fileType == "docx"))
     assert(carved.values.exists(_.fileType == "doc"))
+  }
+
+  test("the payload dir holds exactly the carved rows' files, each of the row's size") {
+    // dropped after streaming: a jpeg under min_size, an mp3 sync word
+    // whose frame walk fails; dropped at classification: a plain zip
+    // outside zip_allowed_kinds; two patterns of one custom type matching
+    // at one offset carve the same path twice
+    val dat = FileTypeConfig("dat", Seq("dat"),
+      Seq(HeaderPattern("dat_short", "44415448"), HeaderPattern("dat_long", "4441544831")),
+      Seq(HeaderPattern("dat_end", "454E4444")), maxSize = 1 << 20, minSize = 0, validator = "footer")
+    val cfg = testCfg.copy(
+      fileTypes = testCfg.fileTypes.map(ft => if (ft.id == "jpeg") ft.copy(minSize = 500) else ft) :+ dat,
+      zipAllowedKinds = Some(Seq("docx")))
+    val samples = Seq(jpeg(), mp3().drop(30), zipWithEntry("data.txt"),
+      zipWithEntry("word/document.xml"), ole("WordDocument"), png(),
+      "DATH1 custom payload ENDD".getBytes("ISO-8859-1"))
+    val (evidence, _) = buildEvidence(samples)
+    val dir = java.nio.file.Files.createTempDirectory("graft-payloads")
+    val rows = CarvePipeline.run(spark, InMemoryRef(evidence), cfg, "payloads",
+      payloadDir = Some(dir.toString)).carvedFiles.collect()
+    val types = rows.map(_.fileType).toSet
+    assert(Set("docx", "doc", "png", "dat").subsetOf(types), s"expected carves missing: $types")
+    assert(!types.contains("jpeg") && !types.contains("mp3") && !types.contains("zip"), types)
+    assert(rows.count(_.fileType == "dat") == 2)
+    val files = {
+      val walk = java.nio.file.Files.walk(dir)
+      try walk.filter(java.nio.file.Files.isRegularFile(_)).toArray.toSeq
+        .map { case p: java.nio.file.Path => dir.relativize(p).toString -> java.nio.file.Files.size(p) }
+      finally walk.close()
+    }
+    assert(files.toMap == rows.map(r => r.path -> r.size).toMap)
+    assert(files.size == rows.map(_.path).distinct.length)
   }
 
   test("file spanning a chunk boundary is carved once (overlap dedup)") {
