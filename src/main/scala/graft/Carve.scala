@@ -217,12 +217,7 @@ object Carve {
     try {
       val md = java.security.MessageDigest.getInstance("SHA-256")
       val buf = new Array[Byte](1 << 20)
-      var off = 0L
-      var n = 1
-      while (n > 0) {
-        n = r.readAt(off, buf, 0, buf.length)
-        if (n > 0) { md.update(buf, 0, n); off += n }
-      }
+      r.foreachBlock(0L, Long.MaxValue, buf)(md.update(buf, 0, _))
       (r.length, graft.carve.Hex.lower(md.digest()))
     } finally r.close()
   }

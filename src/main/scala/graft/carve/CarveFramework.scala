@@ -5,17 +5,18 @@ import graft.evidence.EvidenceReader
 import java.security.MessageDigest
 
 /** Carve-stage plumbing with exact reference semantics
-  * (src/carve/mod.rs:104-351). Every carver ends in one of two tails:
-  * the structure walkers stream through a [[CarveStream]]; every other
-  * carver decides its extent first and hands it to [[CarveOps.finish]],
-  * the one streamed copy with incremental MD5/SHA-256, EOF tolerance,
-  * min_size drop and CarvedFile assembly. Error strings match the
-  * reference's thiserror Display forms — they land in the `errors` column.
+  * (src/carve/mod.rs:104-351). Every carver plans its extent first — a
+  * terminator search, a declared size, an estimate or a structure walk
+  * by position — and hands it to [[CarveOps.finish]], the one streamed
+  * copy with incremental MD5/SHA-256, EOF tolerance, min_size drop and
+  * CarvedFile assembly. Error strings match the reference's thiserror
+  * Display forms — they land in the `errors` column.
   */
 object CarveErrors {
+  val EofMessage = "unexpected eof"
   final class Invalid(val msg: String) extends Exception(msg)
   final class Truncated extends Exception("truncated output")
-  final class Eof extends Exception("unexpected eof")
+  final class Eof extends Exception(EofMessage)
 }
 
 /** Per-task context: evidence handle + run metadata. `payloadSink`, when
@@ -41,72 +42,6 @@ trait CarveHandler extends Serializable {
   def processHit(hit: CarveHit, ctx: ExtractionContext): Option[CarvedFile]
 }
 
-/** Sequential read-and-hash stream over the evidence
-  * (reference CarveStream, src/carve/mod.rs:240-313): readExact fails
-  * Truncated when the *request* would cross maxSize, Eof on evidence end;
-  * everything read is hashed and counted.
-  */
-final class CarveStream(
-    ctx: ExtractionContext,
-    relPath: String,
-    startOffset: Long,
-    maxSize: Long) {
-  private var offset = startOffset
-  private var written0 = 0L
-  private val md5 = MessageDigest.getInstance("MD5")
-  private val sha256 = MessageDigest.getInstance("SHA-256")
-
-  def written: Long = written0
-  def context: ExtractionContext = ctx
-
-  def readExact(len: Int): Array[Byte] = {
-    // a negative length here is a Long size field wrapped by .toInt — an
-    // evidence-controlled value; drop the hit (Invalid) instead of
-    // letting new Array[Byte](-n) kill the task uncaught
-    if (len < 0) throw new CarveErrors.Invalid(s"negative read length $len (size overflow)")
-    if (maxSize > 0 && written0 + len > maxSize) throw new CarveErrors.Truncated
-    val buf = new Array[Byte](len)
-    var read = 0
-    while (read < len) {
-      val n = ctx.evidence.readAt(offset, buf, read, len - read)
-      if (n == 0) throw new CarveErrors.Eof
-      writeBytes(buf, read, n)
-      read += n
-    }
-    buf
-  }
-
-  /** Copy the evidence forward to `end` through one reused buffer
-    * (reference write_range, src/carve/mod.rs:315-351); false when the
-    * evidence ends first. A short read is not the end — an E01 reader
-    * serves one chunk per call — only a read of 0 bytes is.
-    */
-  def copyTo(end: Long): Boolean = {
-    val buf = new Array[Byte](Scan.BufSize)
-    while (offset < end) {
-      val n = ctx.evidence.readAt(offset, buf, 0, math.min(end - offset, Scan.BufSize.toLong).toInt)
-      if (n == 0) return false
-      writeBytes(buf, 0, n)
-    }
-    true
-  }
-
-  def writeBytes(buf: Array[Byte], off: Int, len: Int): Unit = {
-    if (maxSize > 0 && written0 + len > maxSize) throw new CarveErrors.Truncated
-    md5.update(buf, off, len)
-    sha256.update(buf, off, len)
-    // the sink reads bytes[0, len) during the call (ExtractionContext), so
-    // only a block that does not start the buffer is copied
-    ctx.payloadSink.foreach(sink =>
-      sink(relPath, if (off == 0) buf else java.util.Arrays.copyOfRange(buf, off, off + len), len))
-    offset += len
-    written0 += len
-  }
-
-  def finish(): (Long, String, String) =
-    (written0, Hex.lower(md5.digest()), Hex.lower(sha256.digest()))
-}
-
 object Hex {
   private val digits = "0123456789abcdef".toCharArray
   def lower(bytes: Array[Byte]): String = {
@@ -123,12 +58,12 @@ object Hex {
 
 object CarveOps {
 
-  /** The one carve tail of every carver that decides its extent before
-    * copying: stream [start, end) to the payload under the record's final
-    * path, hashing as it goes; drop the carve under minSize; build the
-    * record. When the evidence ends before `end` the carve is truncated,
-    * `eofError` (if any) is appended to `errors`, and with
-    * `eofInvalidates` it is no longer validated.
+  /** The one carve tail: stream [start, end) to the payload under the
+    * record's final path through one reused buffer (reference
+    * write_range, src/carve/mod.rs:315-351), hashing as it goes; drop the
+    * carve under minSize; build the record. When the evidence ends before
+    * `end` the carve is truncated, `eofError` (if any) is appended to
+    * `errors`, and with `eofInvalidates` it is no longer validated.
     */
   def finish(
       ctx: ExtractionContext,
@@ -143,11 +78,21 @@ object CarveOps {
       errors: Seq[String],
       eofError: String = "",
       eofInvalidates: Boolean = false): Option[CarvedFile] = {
-    val stream = new CarveStream(ctx, Naming.relPath(fileType, extension, start), start, 0L)
-    val whole = stream.copyTo(end)
-    val (size, md5Hex, sha256Hex) = stream.finish()
+    val relPath = Naming.relPath(fileType, extension, start)
+    val md5 = MessageDigest.getInstance("MD5")
+    val sha256 = MessageDigest.getInstance("SHA-256")
+    val buf = new Array[Byte](Scan.BufSize)
+    // the sink reads buf[0, n) during the call (ExtractionContext)
+    val reached = ctx.evidence.foreachBlock(start, end, buf) { n =>
+      md5.update(buf, 0, n)
+      sha256.update(buf, 0, n)
+      ctx.payloadSink.foreach(_(relPath, buf, n))
+    }
+    val size = reached - start
+    val whole = reached >= end
     if (size < minSize) None
-    else Some(carvedFile(ctx, fileType, extension, start, size, md5Hex, sha256Hex,
+    else Some(carvedFile(ctx, fileType, extension, start, size, Hex.lower(md5.digest()),
+      Hex.lower(sha256.digest()),
       validated = validated && (whole || !eofInvalidates),
       truncated = truncated || !whole,
       errors = if (whole || eofError.isEmpty) errors else errors :+ eofError,

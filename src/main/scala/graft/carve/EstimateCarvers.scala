@@ -136,15 +136,17 @@ final class RarCarver(val maxSize: Long, val minSize: Long, val extension: Strin
   override def fileType: String = "rar"
   private val Rar4Magic = Hex.decode("526172211A0700")
   private val Rar5Magic = Hex.decode("526172211A070100")
+  private val EofError = "eof before RAR end"
 
   override def processHit(hit: CarveHit, ctx: ExtractionContext): Option[CarvedFile] = {
     val errors = mutable.ArrayBuffer.empty[String]
     val estimate =
       try estimateEnd(ctx, hit.globalOffset, errors)
       catch { case _: CarveErrors.Invalid | _: CarveErrors.Eof => return None }
+    // a block that runs past the evidence end was already recorded by the walk
     CarveOps.finish(ctx, hit, fileType, extension, hit.globalOffset, hit.globalOffset + estimate._1,
       minSize, validated = !estimate._2, truncated = estimate._2, errors = errors.toSeq,
-      eofError = "eof before RAR end", eofInvalidates = true)
+      eofError = if (errors.contains(EofError)) "" else EofError, eofInvalidates = true)
   }
 
   /** (endRelative, truncated) */
@@ -163,7 +165,7 @@ final class RarCarver(val maxSize: Long, val minSize: Long, val extension: Strin
       if (maxSize > 0 && offset - start >= maxSize) {
         truncated = true; errors += "max_size reached before RAR end"; done = true
       } else ctx.evidence.readExactAt(offset, 7) match {
-        case None => truncated = true; errors += "eof before RAR end"; done = true
+        case None => truncated = true; errors += EofError; done = true
         case Some(header) =>
           val headType = header(2) & 0xff
           val flags = Bin.leU16(header, 3)
@@ -202,7 +204,7 @@ final class RarCarver(val maxSize: Long, val minSize: Long, val extension: Strin
       if (maxSize > 0 && offset - start >= maxSize) {
         truncated = true; errors += "max_size reached before RAR end"; done = true
       } else if (ctx.evidence.readExactAt(offset, 4).isEmpty) {
-        truncated = true; errors += "eof before RAR end"; done = true
+        truncated = true; errors += EofError; done = true
       } else readVarintAt(ctx, offset + 4) match {
         case None => truncated = true; errors += "eof while reading RAR header size"; done = true
         case Some((headerSize, sizeLen)) =>

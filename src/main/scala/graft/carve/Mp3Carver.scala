@@ -54,15 +54,14 @@ final class Mp3Carver(val maxSize: Long, val minSize: Long, val extension: Strin
     }
   }
 
-  override protected def walk(stream: CarveStream, hit: CarveHit): Boolean = {
-    val ctx = stream.context
-    val header = stream.readExact(10)
+  override protected def walk(cursor: WalkCursor, hit: CarveHit): Boolean = {
+    val ctx = cursor.context
+    val header = cursor.read(10)
     var audioStart = 0L
     var startedWithId3 = false
     val id3Size = parseId3v2Size(header)
     if (id3Size >= 0) {
-      val remainingId3 = id3Size - 10
-      if (remainingId3 > 0) stream.readExact(remainingId3.toInt)
+      cursor.skip(id3Size - 10)
       audioStart = id3Size
       startedWithId3 = true
     } else if ((header(0) & 0xff) != 0xff || (header(1) & 0xe0) != 0xe0) {
@@ -77,8 +76,7 @@ final class Mp3Carver(val maxSize: Long, val minSize: Long, val extension: Strin
     if (audioStart == 0) {
       val frameSize = parseFrameHeader(header)
       if (frameSize < 0) throw new CarveErrors.Invalid("mp3: invalid first frame header")
-      val remaining = frameSize - 10
-      if (remaining > 0) stream.readExact(remaining)
+      if (frameSize > 10) cursor.skip(frameSize - 10)
       totalSize = frameSize.toLong
       frameCount = 1
     }
@@ -90,14 +88,14 @@ final class Mp3Carver(val maxSize: Long, val minSize: Long, val extension: Strin
         case None => done = true
         case Some(fh) =>
           if (fh(0) == 'T'.toByte && fh(1) == 'A'.toByte && fh(2) == 'G'.toByte) {
-            stream.readExact(128)
+            cursor.skip(128)
             totalSize += 128
             done = true
           } else {
             val frameSize = parseFrameHeader(fh)
             if (frameSize < 0) done = true
             else {
-              stream.readExact(frameSize)
+              cursor.skip(frameSize)
               totalSize += frameSize
               frameCount += 1
             }

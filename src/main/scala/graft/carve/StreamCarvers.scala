@@ -1,12 +1,52 @@
 package graft.carve
 
 import graft.core.CarvedFile
-import java.security.MessageDigest
 
-/** CarveStream-walking validators: the carver reads forward through the
-  * stream (hashing as it goes) until it proves the end of the structure.
-  * On Truncated/Eof the partial carve is kept with truncated=true; on
-  * Invalid the hit is silently dropped. Some carvers add a post-hoc
+/** Structure walkers' view of the evidence: a position that moves through
+  * headers and bodies without copying them (reference CarveStream,
+  * src/carve/mod.rs:240-313, minus the copy). `read(n)` returns the next
+  * `n` header bytes; `skip(n)` moves past a body unread. Each call checks
+  * max_size first — fails Truncated, staying put — then the evidence
+  * end — fails Eof, moving to the end it asked for, so the copy in
+  * [[CarveOps.finish]] meets the evidence end and carves up to it.
+  */
+final class WalkCursor(val context: ExtractionContext, start: Long, maxSize: Long) {
+  private var at = start
+
+  def pos: Long = at
+
+  def read(n: Int): Array[Byte] = {
+    claim(n)
+    val bytes = new Array[Byte](n)
+    val got = context.evidence.readFully(at, bytes, 0, n)
+    at += n
+    if (got < n) throw new CarveErrors.Eof
+    bytes
+  }
+
+  def skip(n: Long): Unit = {
+    claim(n)
+    at += n
+    if (at > context.evidence.length) throw new CarveErrors.Eof
+  }
+
+  /** Move to where a [[Scan.search]] from here stopped. A stop at the
+    * evidence end or at max_size fails as a one-byte read there would.
+    */
+  def moveTo(stop: Scan.Stop): Unit = {
+    skip(stop.at - at)
+    if (!stop.isInstanceOf[Scan.Found]) skip(1)
+  }
+
+  private def claim(n: Long): Unit =
+    if (maxSize > 0 && at - start + n > maxSize) throw new CarveErrors.Truncated
+}
+
+/** Structure-walking validators: the carver walks the structure by
+  * position through a [[WalkCursor]] until it proves the end, then hands
+  * the extent to [[CarveOps.finish]]. On Truncated the carve ends where
+  * the walk stood, on Eof at the evidence end, both with truncated=true;
+  * on Invalid the hit is silently dropped. Some carvers add a post-hoc
   * "max_size reached" flag when the carve filled maxSize exactly
   * (reference: sqlite.rs/webp.rs/wav.rs/avi.rs do, png.rs/gif.rs don't).
   */
@@ -15,7 +55,7 @@ abstract class StreamCarver extends CarveHandler {
   def minSize: Long
 
   /** Walk the structure; set validated via return. Throws CarveErrors. */
-  protected def walk(stream: CarveStream, hit: CarveHit): Boolean
+  protected def walk(cursor: WalkCursor, hit: CarveHit): Boolean
 
   /** Whether to flag size >= maxSize after a successful walk. */
   protected def postMaxCheck: Boolean = true
@@ -24,26 +64,24 @@ abstract class StreamCarver extends CarveHandler {
   protected def rejectUnvalidated: Boolean = false
 
   override def processHit(hit: CarveHit, ctx: ExtractionContext): Option[CarvedFile] = {
-    val relPath = Naming.relPath(fileType, extension, hit.globalOffset)
-    val stream = new CarveStream(ctx, relPath, hit.globalOffset, maxSize)
+    val cursor = new WalkCursor(ctx, hit.globalOffset, maxSize)
     var validated = false
     var truncated = false
     var errors = Vector.empty[String]
-    try validated = walk(stream, hit)
+    try validated = walk(cursor, hit)
     catch {
       case e: CarveErrors.Truncated => truncated = true; errors :+= e.getMessage
-      case e: CarveErrors.Eof => truncated = true; errors :+= e.getMessage
+      case _: CarveErrors.Eof => truncated = true // finish records it at the evidence end
       case _: CarveErrors.Invalid => return None
     }
     if (rejectUnvalidated && !validated && !truncated) return None
-    val (size, md5Hex, shaHex) = stream.finish()
-    if (size < minSize) return None
-    if (postMaxCheck && maxSize > 0 && size >= maxSize) {
-      truncated = true
-      if (!errors.exists(_.contains("max_size"))) errors :+= "max_size reached"
-    }
-    Some(CarveOps.carvedFile(ctx, fileType, extension, hit.globalOffset, size,
-      md5Hex, shaHex, validated, truncated, errors, hit.patternId))
+    CarveOps.finish(ctx, hit, fileType, extension, hit.globalOffset, cursor.pos, minSize,
+      validated, truncated, errors, eofError = CarveErrors.EofMessage, eofInvalidates = true)
+      .map { c =>
+        if (!postMaxCheck || maxSize <= 0 || c.size < maxSize) c
+        else c.copy(truncated = true,
+          errors = if (c.errors.exists(_.contains("max_size"))) c.errors else c.errors :+ "max_size reached")
+      }
   }
 }
 
@@ -55,8 +93,8 @@ final class SqliteCarver(val maxSize: Long, val minSize: Long, val extension: St
   override def fileType: String = "sqlite"
   private val Magic = "SQLite format 3\u0000".getBytes("ISO-8859-1")
 
-  override protected def walk(stream: CarveStream, hit: CarveHit): Boolean = {
-    val header = stream.readExact(100)
+  override protected def walk(cursor: WalkCursor, hit: CarveHit): Boolean = {
+    val header = cursor.read(100)
     if (!header.take(Magic.length).sameElements(Magic))
       throw new CarveErrors.Invalid("sqlite header mismatch")
     val pageSizeRaw = ((header(16) & 0xff) << 8) | (header(17) & 0xff)
@@ -64,39 +102,29 @@ final class SqliteCarver(val maxSize: Long, val minSize: Long, val extension: St
     if (pageSize < 512 || pageSize > 65536 || (pageSize & (pageSize - 1)) != 0)
       throw new CarveErrors.Invalid("sqlite page size invalid")
     val pageCount = Bin.beU32(header, 28)
-    var totalSize = if (pageCount == 0) pageSize else pageSize * pageCount
-    if (totalSize < 100) totalSize = 100
-    val target = math.min(totalSize, if (maxSize > 0) maxSize else totalSize)
-    val remaining = target - 100
-    if (remaining > Int.MaxValue) // unlimited max_size + a huge header page count
-      throw new CarveErrors.Invalid("sqlite declared size exceeds 2 GiB carve limit")
-    if (remaining > 0) stream.readExact(remaining.toInt)
+    val totalSize = if (pageCount == 0) pageSize else pageSize * pageCount
+    cursor.skip(math.min(totalSize, if (maxSize > 0) maxSize else totalSize) - 100)
     true
   }
 }
 
-/** Shared RIFF-declared-size carver (reference src/carve/riff.rs):
-  * total = le_u32@4 + 8; form type at bytes 8-12.
+/** Shared RIFF-declared-size carver for WAV, AVI and WebP (reference
+  * src/carve/riff.rs, webp.rs): total = le_u32@4 + 8; form type at
+  * bytes 8-12.
   */
 abstract class RiffCarver(form: String) extends StreamCarver {
   private val Riff = "RIFF".getBytes("ISO-8859-1")
   private val Form = form.getBytes("ISO-8859-1")
 
-  override protected def walk(stream: CarveStream, hit: CarveHit): Boolean = {
-    val header = stream.readExact(12)
+  override protected def walk(cursor: WalkCursor, hit: CarveHit): Boolean = {
+    val header = cursor.read(12)
     if (!header.take(4).sameElements(Riff))
       throw new CarveErrors.Invalid("riff magic mismatch")
     if (!header.slice(8, 12).sameElements(Form))
       throw new CarveErrors.Invalid(s"$fileType form type mismatch")
     val totalSize = Bin.leU32(header, 4) + 8
     if (totalSize < 12) throw new CarveErrors.Invalid(s"$fileType size too small")
-    val target = math.min(totalSize, if (maxSize > 0) maxSize else totalSize)
-    val remaining = target - 12
-    // declared RIFF sizes near 0xFFFFFFFF minus the cap can exceed a
-    // JVM array; reject instead of wrapping .toInt negative
-    if (remaining > Int.MaxValue)
-      throw new CarveErrors.Invalid(s"$fileType declared size exceeds 2 GiB carve limit")
-    if (remaining > 0) stream.readExact(remaining.toInt)
+    cursor.skip(math.min(totalSize, if (maxSize > 0) maxSize else totalSize) - 12)
     true
   }
 }
@@ -108,21 +136,7 @@ final class AviCarver(val maxSize: Long, val minSize: Long, val extension: Strin
     extends RiffCarver("AVI ") { override def fileType: String = "avi" }
 
 final class WebpCarver(val maxSize: Long, val minSize: Long, val extension: String = "webp")
-    extends StreamCarver {
-  override def fileType: String = "webp"
-  override protected def walk(stream: CarveStream, hit: CarveHit): Boolean = {
-    val header = stream.readExact(12)
-    if (!header.take(4).sameElements("RIFF".getBytes("ISO-8859-1")) ||
-        !header.slice(8, 12).sameElements("WEBP".getBytes("ISO-8859-1")))
-      throw new CarveErrors.Invalid("webp header mismatch")
-    val totalSize = Bin.leU32(header, 4) + 8
-    if (totalSize < 12) throw new CarveErrors.Invalid("webp size invalid")
-    val target = math.min(totalSize, if (maxSize > 0) maxSize else totalSize)
-    val remaining = target - 12
-    if (remaining > 0) stream.readExact(remaining.toInt)
-    true
-  }
-}
+    extends RiffCarver("WEBP") { override def fileType: String = "webp" }
 
 /** PNG chunk walk to IEND: 4B len + 4B type + data + CRC per chunk
   * (reference src/carve/png.rs:35-125). No post max-size flag.
@@ -133,18 +147,15 @@ final class PngCarver(val maxSize: Long, val minSize: Long, val extension: Strin
   override protected def postMaxCheck: Boolean = false
   private val Sig = Array(0x89, 0x50, 0x4e, 0x47, 0x0d, 0x0a, 0x1a, 0x0a).map(_.toByte)
 
-  override protected def walk(stream: CarveStream, hit: CarveHit): Boolean = {
-    val sig = stream.readExact(8)
-    if (!sig.sameElements(Sig)) throw new CarveErrors.Invalid("png signature mismatch")
-    while (true) {
-      val lenBytes = stream.readExact(4)
-      val len = Bin.beU32(lenBytes, 0)
-      val typBytes = stream.readExact(4)
-      val chunkType = new String(typBytes, "ISO-8859-1")
+  override protected def walk(cursor: WalkCursor, hit: CarveHit): Boolean = {
+    if (!cursor.read(8).sameElements(Sig)) throw new CarveErrors.Invalid("png signature mismatch")
+    var end = false
+    while (!end) {
+      val len = Bin.beU32(cursor.read(4), 0)
+      end = new String(cursor.read(4), "ISO-8859-1") == "IEND"
       if (maxSize > 0 && len > maxSize) throw new CarveErrors.Truncated
-      if (len > 0) stream.readExact(len.toInt)
-      stream.readExact(4) // CRC
-      if (chunkType == "IEND") return true
+      cursor.skip(len)
+      cursor.skip(4) // CRC
     }
     true
   }
@@ -156,43 +167,34 @@ final class GifCarver(val maxSize: Long, val minSize: Long, val extension: Strin
   override def fileType: String = "gif"
   override protected def postMaxCheck: Boolean = false
 
-  override protected def walk(stream: CarveStream, hit: CarveHit): Boolean = {
-    val header = stream.readExact(6)
-    val h = new String(header, "ISO-8859-1")
+  override protected def walk(cursor: WalkCursor, hit: CarveHit): Boolean = {
+    val h = new String(cursor.read(6), "ISO-8859-1")
     if (h != "GIF87a" && h != "GIF89a") throw new CarveErrors.Invalid("gif header mismatch")
-    val lsd = stream.readExact(7)
-    val packed = lsd(4) & 0xff
-    if ((packed & 0x80) != 0) {
-      val sizePow = packed & 0x07
-      stream.readExact((3L * (1L << (sizePow + 1))).toInt)
-    }
+    skipColorTable(cursor, cursor.read(7)(4))
     while (true) {
-      val blockId = stream.readExact(1)(0) & 0xff
-      blockId match {
+      cursor.read(1)(0) & 0xff match {
         case 0x3b => return true
         case 0x21 =>
-          stream.readExact(1) // label
-          readSubBlocks(stream)
+          cursor.skip(1) // label
+          skipSubBlocks(cursor)
         case 0x2c =>
-          val imageDesc = stream.readExact(9)
-          val p = imageDesc(8) & 0xff
-          if ((p & 0x80) != 0) {
-            val sizePow = p & 0x07
-            stream.readExact((3L * (1L << (sizePow + 1))).toInt)
-          }
-          stream.readExact(1) // LZW min code size
-          readSubBlocks(stream)
+          skipColorTable(cursor, cursor.read(9)(8))
+          cursor.skip(1) // LZW min code size
+          skipSubBlocks(cursor)
         case _ => throw new CarveErrors.Invalid("gif block id invalid")
       }
     }
     true
   }
 
-  private def readSubBlocks(stream: CarveStream): Unit = {
-    var done = false
-    while (!done) {
-      val size = stream.readExact(1)(0) & 0xff
-      if (size == 0) done = true else stream.readExact(size)
+  private def skipColorTable(cursor: WalkCursor, packed: Byte): Unit =
+    if ((packed & 0x80) != 0) cursor.skip(3L * (1L << ((packed & 0x07) + 1)))
+
+  private def skipSubBlocks(cursor: WalkCursor): Unit = {
+    var size = cursor.read(1)(0) & 0xff
+    while (size != 0) {
+      cursor.skip(size)
+      size = cursor.read(1)(0) & 0xff
     }
   }
 }

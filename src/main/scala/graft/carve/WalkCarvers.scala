@@ -2,8 +2,10 @@ package graft.carve
 
 import graft.core.CarvedFile
 
-/** Structure-walking carvers: tar block walk, ogg page walk, ico directory
-  * validation, ISO-BMFF (mp4/mov) box walk.
+/** Structure-walking carvers. Tar and ogg walk by position through a
+  * [[WalkCursor]] (see [[StreamCarver]]); ico reads its directory and
+  * ISO-BMFF (mp4/mov) its box headers at absolute offsets. Each plans its
+  * extent and ends in [[CarveOps.finish]].
   */
 
 /** TAR: hit on `ustar`@257 rebased to block start; 512-byte block walk
@@ -25,10 +27,10 @@ final class TarCarver(val maxSize: Long, val minSize: Long, val extension: Strin
     super.processHit(hit.copy(globalOffset = start), ctx)
   }
 
-  override protected def walk(stream: CarveStream, hit: CarveHit): Boolean = {
+  override protected def walk(cursor: WalkCursor, hit: CarveHit): Boolean = {
     var zeroBlocks = 0
     while (true) {
-      val header = stream.readExact(Block)
+      val header = cursor.read(Block)
       if (header.forall(_ == 0)) {
         zeroBlocks += 1
         if (zeroBlocks >= 2) return true
@@ -39,13 +41,7 @@ final class TarCarver(val maxSize: Long, val minSize: Long, val extension: Strin
           throw new CarveErrors.Invalid("tar ustar magic mismatch")
         if (!validateChecksum(header)) throw new CarveErrors.Invalid("tar checksum invalid")
         val size = parseOctal(header, 124, 136)
-        val blocks = (size + Block - 1) / Block
-        val dataLen = blocks * Block
-        // the 11-digit octal size field reaches ~8.6 GB; past Int.MaxValue
-        // the .toInt either wraps negative or silently desyncs the walk
-        if (dataLen > Int.MaxValue)
-          throw new CarveErrors.Invalid("tar entry exceeds 2 GiB carve limit")
-        if (dataLen > 0) stream.readExact(dataLen.toInt)
+        cursor.skip((size + Block - 1) / Block * Block)
       }
     }
     true
@@ -91,19 +87,16 @@ final class OggCarver(val maxSize: Long, val minSize: Long, val extension: Strin
   override def fileType: String = "ogg"
   private val Magic = "OggS".getBytes("ISO-8859-1")
 
-  override protected def walk(stream: CarveStream, hit: CarveHit): Boolean = {
+  override protected def walk(cursor: WalkCursor, hit: CarveHit): Boolean = {
     var pages = 0L
     while (true) {
-      val header = stream.readExact(27)
+      val header = cursor.read(27)
       if (!header.take(4).sameElements(Magic))
         throw new CarveErrors.Invalid("ogg page signature mismatch")
       if (header(4) != 0) throw new CarveErrors.Invalid("ogg version unsupported")
       val headerType = header(5) & 0xff
       val segmentCount = header(26) & 0xff
-      val segmentTable = stream.readExact(segmentCount)
-      var dataLen = 0L
-      segmentTable.foreach(b => dataLen += (b & 0xff))
-      if (dataLen > 0) stream.readExact(dataLen.toInt)
+      cursor.skip(cursor.read(segmentCount).map(_ & 0xffL).sum)
       pages += 1
       if ((headerType & 0x04) != 0) return true
       if (pages > 1000000L) throw new CarveErrors.Invalid("ogg page limit exceeded")

@@ -36,6 +36,21 @@ trait EvidenceReader extends Closeable {
     got
   }
 
+  /** The one forward block loop: hands [from, end) to `block(n)` read by
+    * read through `buf` (bytes buf[0, n)) and returns the offset reached,
+    * short of `end` only where the evidence ends. A short read is not the
+    * end — an E01 reader serves one chunk per call — only a read of 0 is.
+    */
+  def foreachBlock(from: Long, end: Long, buf: Array[Byte])(block: Int => Unit): Long = {
+    var offset = from
+    var n = 1
+    while (offset < end && n > 0) {
+      n = readAt(offset, buf, 0, math.min(end - offset, buf.length.toLong).toInt)
+      if (n > 0) { block(n); offset += n }
+    }
+    offset
+  }
+
   /** Convenience: exactly-`len` read or None (reference read_exact_at). */
   def readExactAt(offset: Long, len: Int): Option[Array[Byte]] =
     Some(new Array[Byte](len)).filter(buf => readFully(offset, buf, 0, len) == len)

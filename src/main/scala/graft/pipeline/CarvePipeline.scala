@@ -440,18 +440,14 @@ object CarvePipeline {
     carved.mapPartitions { iter =>
       val reader = evidenceRef.open()
       closeOnTaskEnd(reader.close())
+      val md = java.security.MessageDigest.getInstance("SHA-256")
+      val buf = new Array[Byte](Scan.BufSize)
       iter.map { c =>
-        val md = java.security.MessageDigest.getInstance("SHA-256")
-        val buf = new Array[Byte](64 * 1024)
-        var off = c.globalStart
-        var remaining = c.size
-        var short = false
-        while (remaining > 0 && !short) {
-          val n = reader.readAt(off, buf, 0, math.min(remaining, buf.length.toLong).toInt)
-          if (n == 0) short = true
-          else { md.update(buf, 0, n); off += n; remaining -= n }
-        }
-        (c.path, !short && Hex.lower(md.digest()) == c.sha256)
+        val end = c.globalStart + c.size
+        val reached = reader.foreachBlock(c.globalStart, end, buf)(md.update(buf, 0, _))
+        // digest() also resets md for the next row
+        val sha256 = Hex.lower(md.digest())
+        (c.path, reached == end && sha256 == c.sha256)
       }
     }
   }

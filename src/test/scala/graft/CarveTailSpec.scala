@@ -62,10 +62,13 @@ class CarveTailSpec extends AnyFunSuite {
       (new RarCarver(0, 0), rar4(), "p"),
       (new TiffCarver(0, 0), tiff(), "p"),
       (new Mp4Carver(0, 0), mp4(), "p"),
-      (new MovCarver(0, 0), mov(), "p"))
+      (new MovCarver(0, 0), mov(), "p")) ++
+      // the structure walkers; a tar_ustar hit sits on the magic 257 bytes in
+      WalkerSamples.all.map(w => (w.make(0, 0), w.bytes, w.patternId))
     cases.foreach { case (handler, sample, patternId) =>
       // planted 37 bytes before a read boundary, so every sample straddles one
-      val (evidence, at) = planted(sample, before = 3 * cap - 37)
+      val (evidence, start) = planted(sample, before = 3 * cap - 37)
+      val at = if (patternId == "tar_ustar") start + 257 else start
       val whole = carveWith(new InMemoryEvidence(evidence), handler, at, patternId)
       assert(whole.exists(c => c.validated && !c.truncated), s"${handler.fileType}: no whole reference carve")
       val capped = carveWith(new CappedEvidence(evidence, cap), handler, at, patternId)

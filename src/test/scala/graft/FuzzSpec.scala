@@ -63,14 +63,16 @@ class FuzzSpec extends AnyFunSuite {
   }
 
   test("hostile length fields are bounded") {
-    // png chunk length 0x7fffffff — CarveStream must fail cleanly (Eof)
+    // png chunk length 0x7fffffff — the walk must stop cleanly (max_size)
     val bad = png()
     bad(8) = 0x7f.toByte; bad(9) = 0xff.toByte; bad(10) = 0xff.toByte; bad(11) = 0xff.toByte
     runAll(bad, 0L)
-    // sqlite page_count huge
+    // sqlite page_count huge: 512 MiB (the sqlite max_size) is declared
+    // over 1 KiB of evidence, and no carver may allocate it
     val sq = sqlite()
     sq(28) = 0x7f.toByte; sq(29) = 0xff.toByte
-    runAll(sq, 0L)
+    val (_, allocated) = WalkerSamples.allocatedBytes(runAll(sq, 0L))
+    assert(allocated < 4L * 1024 * 1024, s"allocated $allocated bytes")
   }
 
   test("sqlite reader survives corrupt databases") {
