@@ -49,31 +49,6 @@ final case class EngineConfig(
   // budgets above Int.MaxValue are clamped where they are applied
   require(maxFiles.forall(_ >= 0) && maxChunks.forall(_ >= 0),
     s"negative budget: max_files ${maxFiles.getOrElse("-")}, max_chunks ${maxChunks.getOrElse("-")}")
-
-  /** Stable digest of the effective configuration — lands in the sink
-    * provenance columns (reference config_hash, src/config.rs:99).
-    */
-  def configHash: String = {
-    val canonical = new StringBuilder
-    canonical.append(chunkSize).append('|').append(overlap).append('|')
-      .append(stringMinLen).append('|').append(stringMaxLen).append('|')
-      .append(stringScanUtf16).append('|')
-      .append(enableUrlScan).append('|').append(enableEmailScan).append('|')
-      .append(enablePhoneScan).append('|').append(sqlitePageRecovery).append('|')
-      .append(entropyWindowSize).append('|').append(entropyThreshold).append('|')
-      .append(zipAllowedKinds.map(_.mkString(",")).getOrElse("")).append('|')
-      .append(oleAllowedKinds.map(_.mkString(",")).getOrElse("")).append('|')
-      .append(quicktimeMode).append('|')
-    fileTypes.sortBy(_.id).foreach { ft =>
-      canonical.append(ft.id).append(':').append(ft.validator).append(':')
-        .append(ft.maxSize).append(':').append(ft.minSize).append(':')
-        .append(ft.requireEocd).append(':')
-        .append(ft.headerPatterns.map(p => p.id + "=" + p.hex).mkString(","))
-        .append(';')
-    }
-    Hex.lower(java.security.MessageDigest.getInstance("SHA-256")
-      .digest(canonical.toString.getBytes("UTF-8")))
-  }
 }
 
 object EngineConfig {

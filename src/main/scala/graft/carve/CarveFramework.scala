@@ -78,6 +78,8 @@ object CarveOps {
       errors: Seq[String],
       eofError: String = "",
       eofInvalidates: Boolean = false): Option[CarvedFile] = {
+    // the copy never passes `end`, so an extent under minSize is dropped unread
+    if (end - start < minSize) return None
     val relPath = Naming.relPath(fileType, extension, start)
     val md5 = MessageDigest.getInstance("MD5")
     val sha256 = MessageDigest.getInstance("SHA-256")

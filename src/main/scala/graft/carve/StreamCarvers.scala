@@ -1,6 +1,7 @@
 package graft.carve
 
 import graft.core.CarvedFile
+import graft.sqlite.SqliteFormat
 
 /** Structure walkers' view of the evidence: a position that moves through
   * headers and bodies without copying them (reference CarveStream,
@@ -86,24 +87,20 @@ abstract class StreamCarver extends CarveHandler {
 }
 
 /** SQLite main file: exact size = page_size × page_count from the 100-byte
-  * header (reference src/carve/sqlite.rs:35-144).
+  * header (reference src/carve/sqlite.rs:35-144), read by the same header
+  * rule as the table reader and the page-recovery scan
+  * ([[graft.sqlite.SqliteFormat.header]]).
   */
 final class SqliteCarver(val maxSize: Long, val minSize: Long, val extension: String = "sqlite")
     extends StreamCarver {
   override def fileType: String = "sqlite"
-  private val Magic = "SQLite format 3\u0000".getBytes("ISO-8859-1")
 
   override protected def walk(cursor: WalkCursor, hit: CarveHit): Boolean = {
-    val header = cursor.read(100)
-    if (!header.take(Magic.length).sameElements(Magic))
-      throw new CarveErrors.Invalid("sqlite header mismatch")
-    val pageSizeRaw = ((header(16) & 0xff) << 8) | (header(17) & 0xff)
-    val pageSize = if (pageSizeRaw == 1) 65536L else pageSizeRaw.toLong
-    if (pageSize < 512 || pageSize > 65536 || (pageSize & (pageSize - 1)) != 0)
-      throw new CarveErrors.Invalid("sqlite page size invalid")
-    val pageCount = Bin.beU32(header, 28)
-    val totalSize = if (pageCount == 0) pageSize else pageSize * pageCount
-    cursor.skip(math.min(totalSize, if (maxSize > 0) maxSize else totalSize) - 100)
+    val header = SqliteFormat.header(cursor.read(SqliteFormat.HeaderLen))
+      .getOrElse(throw new CarveErrors.Invalid("sqlite header invalid"))
+    val pageSize = header.pageSize.toLong
+    val totalSize = if (header.declaredPages == 0) pageSize else pageSize * header.declaredPages
+    cursor.skip(math.min(totalSize, if (maxSize > 0) maxSize else totalSize) - SqliteFormat.HeaderLen)
     true
   }
 }

@@ -11,17 +11,28 @@ import org.apache.spark.sql.functions._
   *  - Firefox: unix microseconds.
   *  - Firefox cookie `expiry`: unix SECONDS (×1e6 before converting).
   *
-  * Column forms stay inside whole-stage codegen (pure built-ins, no UDF).
+  * Column forms stay inside whole-stage codegen (pure built-ins, no UDF);
+  * the scalar forms serve the SQLite readers.
   */
 object TimeConv {
   val WebkitToUnixSeconds: Long = 11644473600L
+  val WebkitToUnixMicros: Long = WebkitToUnixSeconds * 1000000L
+  private val MinPlausibleMicros = 631152000000000L // 1990-01-01T00:00:00Z in unix µs
+  private val PlausibleSlackMicros = 2L * 86400 * 1000000
+
+  /** Unix µs → Timestamp, flooring towards negative infinity. */
+  def microTimestamp(us: Long): java.sql.Timestamp = {
+    val t = new java.sql.Timestamp(Math.floorDiv(us, 1000000L) * 1000L)
+    t.setNanos((Math.floorMod(us, 1000000L) * 1000L).toInt)
+    t
+  }
 
   /** WebKit µs → TimestampType. Zero/negative-window handling matches the
     * reference: values that would precede the unix epoch by more than the
     * WebKit offset are still converted arithmetically (no clamping).
     */
   def webkitMicros(c: Column): Column =
-    timestamp_micros(c - lit(WebkitToUnixSeconds * 1000000L))
+    timestamp_micros(c - lit(WebkitToUnixMicros))
 
   /** Unix µs → TimestampType. */
   def unixMicros(c: Column): Column = timestamp_micros(c)
@@ -33,10 +44,11 @@ object TimeConv {
     * (reference src/parsers/sqlite_pages.rs:318-326):
     * 1990-01-01 ≤ t ≤ now + 2 days. `nowMicros` injected for determinism.
     */
-  def plausibleMicros(c: Column, nowMicros: Long): Column = {
-    val min = 631152000000000L // 1990-01-01T00:00:00Z in unix µs
-    c.geq(lit(min)) && c.leq(lit(nowMicros + 2L * 86400 * 1000000))
-  }
+  def plausibleMicros(c: Column, nowMicros: Long): Column =
+    c.geq(lit(MinPlausibleMicros)) && c.leq(lit(nowMicros + PlausibleSlackMicros))
+
+  def plausibleMicros(us: Long, nowMicros: Long): Boolean =
+    us >= MinPlausibleMicros && us <= nowMicros + PlausibleSlackMicros
 
   /** Chrome history `transition & 0xFF` → 11-way label
     * (reference src/parsers/sqlite_db.rs:624-639).

@@ -156,12 +156,6 @@ object Html {
     array_max(ranked).getField("t")
   }
 
-  /** The full response-record bridge: UTF-8 decode of the binary WARC
-    * payload → HTTP body → HTML text. One expression, fully codegen'd.
-    */
-  def responseText(payload: Column): Column =
-    htmlToText(httpBody(decode(payload, "UTF-8")))
-
   /** Header values that become KEYS (frontier URLs, If-None-Match
     * tokens) shed trailing whitespace — httpHeader's capture runs to
     * the CR, and a server emitting `Location: /new ` would otherwise

@@ -510,17 +510,6 @@ object Multimodal {
       }
   }
 
-  /** Frame sampling plan for video-like payloads: deterministic frame
-    * indices (every `stride`-th of nFrames) — the shuffle-free metadata
-    * half of a sample-and-decode stage.
-    */
-  def sampleFrames(meta: Dataset[MediaMeta], stride: Int): DataFrame = {
-    require(stride >= 1, s"stride must be >= 1, got $stride")
-    meta.toDF().select(
-      col("id"),
-      explode(sequence(lit(0), col("nFrames") - 1, lit(stride))).as("frame_idx"))
-  }
-
   final case class ImageDHash(id: Long, width: Int, height: Int,
                               dhashA: Long, dhashB: Long)
 

@@ -1,6 +1,7 @@
 package graft.sqlite
 
 import graft.core.{BrowserCookieRecord, BrowserDownloadRecord, BrowserHistoryRecord}
+import graft.functions.TimeConv
 import java.sql.Timestamp
 
 /** Browser history/cookie/download extraction from SQLite profile DBs —
@@ -12,20 +13,10 @@ import java.sql.Timestamp
   */
 object BrowserExtract {
 
-  private val WebkitOffsetMicros = 11644473600000000L
+  private def webkitTs(us: Long): Option[Timestamp] =
+    Some(TimeConv.microTimestamp(us - TimeConv.WebkitToUnixMicros))
 
-  private def webkitTs(us: Long): Option[Timestamp] = {
-    val unixMicros = us - WebkitOffsetMicros
-    Some(microTs(unixMicros))
-  }
-
-  private def unixMicroTs(us: Long): Option[Timestamp] = Some(microTs(us))
-
-  private def microTs(us: Long): Timestamp = {
-    val t = new Timestamp(Math.floorDiv(us, 1000000L) * 1000L)
-    t.setNanos((Math.floorMod(us, 1000000L) * 1000L).toInt)
-    t
-  }
+  private def unixMicroTs(us: Long): Option[Timestamp] = Some(TimeConv.microTimestamp(us))
 
   def chromeTransitionLabel(t: Long): String = (t & 0xff) match {
     case 0 => "link"; case 1 => "typed"; case 2 => "auto_bookmark"

@@ -2,15 +2,7 @@ package graft.sqlite
 
 import scala.collection.mutable
 
-/** Pure-Scala reader for well-formed SQLite main files (format 3) — the
-  * analog of the reference's embedded rusqlite usage (SURVEY §7.4 risk 2)
-  * built directly on the public file-format spec: 100-byte header, table
-  * b-trees (interior 0x05 / leaf 0x0D pages), varint record headers,
-  * serial-type values, and overflow-page chains.
-  *
-  * Scope: read-only table scans + schema introspection — exactly what
-  * browser-history extraction needs. No indexes, no WAL, no freelist.
-  */
+/** One field of a SQLite record, by serial-type class. */
 sealed trait SqlValue
 case object SqlNull extends SqlValue
 final case class SqlInt(value: Long) extends SqlValue
@@ -34,140 +26,23 @@ object SqlValue {
 
 final class SqliteParseException(msg: String) extends Exception(msg)
 
+/** Pure-Scala reader for well-formed SQLite main files — the analog of
+  * the reference's embedded rusqlite usage (SURVEY §7.4 risk 2): table
+  * b-tree scans plus schema introspection, exactly what browser-history
+  * extraction needs. No indexes, no WAL, no freelist. The bytes are
+  * decoded by [[SqliteFormat]], which the page-recovery scan
+  * [[SqlitePages]] shares; this reader is its strict consumer: a
+  * header that breaks the format's rule is an IllegalArgumentException,
+  * and a table with any cell that did not decode whole is a
+  * [[SqliteParseException]].
+  */
 final class SqliteFile(data: Array[Byte]) {
-  require(data.length >= 100, "sqlite file too short")
-  private val Magic = "SQLite format 3\u0000".getBytes("ISO-8859-1")
-  require(data.take(16).sameElements(Magic), "sqlite magic mismatch")
+  private val image = SqliteFormat.image(data)
+    .getOrElse(throw new IllegalArgumentException("not a sqlite main file: magic or page size invalid"))
 
-  val pageSize: Int = {
-    val raw = ((data(16) & 0xff) << 8) | (data(17) & 0xff)
-    if (raw == 1) 65536 else raw
-  }
-  private val reservedPerPage: Int = data(20) & 0xff
-  val usableSize: Int = pageSize - reservedPerPage
-  val pageCount: Int = {
-    // the in-header database size (bytes 28-31) is only trustworthy when
-    // non-zero (old writers and zeroed headers are legal per the spec's
-    // version-valid-for rule); fall back to the byte length
-    val hdr = ((data(28) & 0xffL) << 24 | (data(29) & 0xffL) << 16 |
-      (data(30) & 0xffL) << 8 | (data(31) & 0xffL)).toInt
-    val byLen = data.length / pageSize
-    if (hdr > 0) math.min(hdr, byLen) else byLen
-  }
-
-  @inline private def u8(off: Int): Int = data(off) & 0xff
-  @inline private def u16(off: Int): Int = ((data(off) & 0xff) << 8) | (data(off + 1) & 0xff)
-  @inline private def u32(off: Int): Long =
-    ((data(off) & 0xffL) << 24) | ((data(off + 1) & 0xffL) << 16) | ((data(off + 2) & 0xffL) << 8) | (data(off + 3) & 0xffL)
-
-  /** (value, bytesRead) big-endian varint, 1-9 bytes. */
-  private def varint(off: Int): (Long, Int) = {
-    var v = 0L
-    var i = 0
-    while (i < 8) {
-      val b = u8(off + i)
-      v = (v << 7) | (b & 0x7f)
-      if ((b & 0x80) == 0) return (v, i + 1)
-      i += 1
-    }
-    ((v << 8) | u8(off + 8), 9)
-  }
-
-  private def pageOffset(page: Long): Int = ((page - 1) * pageSize).toInt
-
-  /** Full cell payload, following overflow chains when spilled. */
-  private def readPayload(localStart: Int, payloadLen: Long, localLen: Int): Array[Byte] = {
-    if (payloadLen <= localLen) java.util.Arrays.copyOfRange(data, localStart, localStart + payloadLen.toInt)
-    else {
-      val out = new Array[Byte](payloadLen.toInt)
-      System.arraycopy(data, localStart, out, 0, localLen)
-      var got = localLen
-      var nextPage = u32(localStart + localLen)
-      while (got < payloadLen && nextPage != 0 && nextPage <= pageCount) {
-        val base = pageOffset(nextPage)
-        val chunk = math.min(usableSize - 4, (payloadLen - got).toInt)
-        System.arraycopy(data, base + 4, out, got, chunk)
-        got += chunk
-        nextPage = u32(base)
-      }
-      if (got < payloadLen) throw new SqliteParseException("overflow chain truncated")
-      out
-    }
-  }
-
-  /** Decode one record: header varints → serial types → values. */
-  private def decodeRecord(payload: Array[Byte]): IndexedSeq[SqlValue] = {
-    def pvarint(off: Int): (Long, Int) = {
-      var v = 0L
-      var i = 0
-      while (i < 8) {
-        val b = payload(off + i) & 0xff
-        v = (v << 7) | (b & 0x7f)
-        if ((b & 0x80) == 0) return (v, i + 1)
-        i += 1
-      }
-      ((v << 8) | (payload(off + 8) & 0xff), 9)
-    }
-    val (headerLen, hl) = pvarint(0)
-    if (headerLen < hl || headerLen > payload.length)
-      throw new SqliteParseException("record header truncated")
-    val types = mutable.ArrayBuffer.empty[Long]
-    var off = hl
-    while (off < headerLen) {
-      // bounds-checked: a corrupt headerLen must raise the class's typed
-      // parse error, not an ArrayIndexOutOfBoundsException
-      if (off >= payload.length)
-        throw new SqliteParseException("record header truncated")
-      val (t, n) = pvarint(off)
-      types += t
-      off += n
-    }
-    var body = headerLen.toInt
-    def need(n: Int): Unit =
-      if (n < 0 || body + n > payload.length)
-        throw new SqliteParseException("record truncated")
-    types.map { t =>
-      def beInt(n: Int): Long = {
-        need(n)
-        var v = if ((payload(body) & 0x80) != 0) -1L else 0L
-        var i = 0
-        while (i < n) { v = (v << 8) | (payload(body + i) & 0xff); i += 1 }
-        body += n
-        v
-      }
-      t match {
-        case 0 => SqlNull
-        case 1 => SqlInt(beInt(1))
-        case 2 => SqlInt(beInt(2))
-        case 3 => SqlInt(beInt(3))
-        case 4 => SqlInt(beInt(4))
-        case 5 => SqlInt(beInt(6))
-        case 6 => SqlInt(beInt(8))
-        case 7 =>
-          need(8)
-          var bits = 0L
-          var i = 0
-          while (i < 8) { bits = (bits << 8) | (payload(body + i) & 0xffL); i += 1 }
-          body += 8
-          SqlReal(java.lang.Double.longBitsToDouble(bits))
-        case 8 => SqlInt(0)
-        case 9 => SqlInt(1)
-        case n if n >= 12 && n % 2 == 0 =>
-          val len = ((n - 12) / 2).toInt
-          need(len)
-          val v = java.util.Arrays.copyOfRange(payload, body, body + len)
-          body += len
-          SqlBlob(v)
-        case n if n >= 13 =>
-          val len = ((n - 13) / 2).toInt
-          need(len)
-          val v = new String(payload, body, len, "UTF-8")
-          body += len
-          SqlText(v)
-        case other => throw new SqliteParseException(s"serial type $other unsupported")
-      }
-    }.toIndexedSeq
-  }
+  val pageSize: Int = image.header.pageSize
+  val usableSize: Int = image.header.usableSize
+  val pageCount: Int = image.pageCount.toInt
 
   /** Walk a table b-tree from its root page; emits (rowid, values). */
   def tableRows(rootPage: Long): Seq[(Long, IndexedSeq[SqlValue])] = {
@@ -176,39 +51,17 @@ final class SqliteFile(data: Array[Byte]) {
 
     def walk(page: Long): Unit = {
       if (page < 1 || page > pageCount || !visited.add(page)) return
-      val base = pageOffset(page)
-      val headerOff = if (page == 1) base + 100 else base
-      val flag = u8(headerOff)
-      val cellCount = u16(headerOff + 3)
-      flag match {
-        case 0x0d => // leaf table
-          val ptrBase = headerOff + 8
-          var c = 0
-          while (c < cellCount) {
-            val cellOff = base + u16(ptrBase + c * 2)
-            val (payloadLen, n1) = varint(cellOff)
-            val (rowid, n2) = varint(cellOff + n1)
-            val maxLocal = usableSize - 35
-            val localLen =
-              if (payloadLen <= maxLocal) payloadLen.toInt
-              else {
-                val minLocal = (usableSize - 12) * 32 / 255 - 23
-                val k = minLocal + ((payloadLen - minLocal) % (usableSize - 4)).toInt
-                if (k > maxLocal) minLocal else k
-              }
-            val payload = readPayload(cellOff + n1 + n2, payloadLen, localLen)
-            out += ((rowid, decodeRecord(payload)))
-            c += 1
+      image.pageType(page) match {
+        case SqliteFormat.LeafTable =>
+          image.leafRecords(page) { r =>
+            if (r.status != SqliteFormat.Complete)
+              throw new SqliteParseException(s"${r.status.message} on page $page")
+            out += ((r.rowid, r.values))
           }
-        case 0x05 => // interior table
-          val ptrBase = headerOff + 12
-          var c = 0
-          while (c < cellCount) {
-            val cellOff = base + u16(ptrBase + c * 2)
-            walk(u32(cellOff))
-            c += 1
-          }
-          walk(u32(headerOff + 8)) // right-most pointer
+        case SqliteFormat.InteriorTable =>
+          image.children(page)
+            .getOrElse(throw new SqliteParseException(s"interior page $page runs past its end"))
+            .foreach(walk)
         case other => throw new SqliteParseException(s"unexpected page flag $other on page $page")
       }
     }

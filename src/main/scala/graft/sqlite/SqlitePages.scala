@@ -1,209 +1,68 @@
 package graft.sqlite
 
 import graft.core.BrowserHistoryRecord
-import java.sql.Timestamp
+import graft.functions.TimeConv
 import scala.collection.mutable
 
 /** Page-level history recovery for damaged/partial SQLite files
-  * (reference src/parsers/sqlite_pages.rs): every page that looks like a
-  * table leaf (flag 0x0D) is scanned tolerantly — varint record headers,
-  * serial-type decode, overflow chains — URL-bearing text fields become
-  * records, with the longest non-URL text as title and the first
-  * plausible WebKit/unix-µs int as visit time; deduped per URL with
-  * first-non-null-wins merging.
+  * (reference src/parsers/sqlite_pages.rs): the tolerant consumer of
+  * [[SqliteFormat]], which it shares with [[SqliteFile]]. Every page that
+  * looks like a table leaf (flag 0x0D) is read by position, and each
+  * cell keeps the fields decoded before its first overrun. What is left
+  * here are the heuristics: URL-bearing text fields become records, with
+  * the longest non-URL text as title and the first plausible WebKit or
+  * unix-µs int as visit time, deduped per URL with first-non-null-wins
+  * merging.
   */
 object SqlitePages {
 
   private val MaxTextLen = 4096
-  private val WebkitOffsetMicros = 11644473600000000L
-  private val MinPlausibleMicros = 631152000000000L // 1990-01-01 UTC
 
   def extractHistory(
       data: Array[Byte],
       runId: String,
       sourceFile: String,
       nowMicros: Long = System.currentTimeMillis() * 1000L): Seq[BrowserHistoryRecord] = {
-    if (data.length < 100) return Seq.empty
-    val magic = "SQLite format 3\u0000".getBytes("ISO-8859-1")
-    if (!data.take(16).sameElements(magic)) return Seq.empty
-    var pageSize = ((data(16) & 0xff) << 8) | (data(17) & 0xff)
-    if (pageSize == 1) pageSize = 65536
-    if (pageSize < 512) return Seq.empty
-    val usable = pageSize - (data(20) & 0xff)
-    val maxPlausible = nowMicros + 2L * 86400 * 1000000
-
-    def plausible(us: Long): Boolean = us >= MinPlausibleMicros && us <= maxPlausible
-
-    def microTs(us: Long): Timestamp = {
-      val t = new Timestamp(Math.floorDiv(us, 1000000L) * 1000L)
-      t.setNanos((Math.floorMod(us, 1000000L) * 1000L).toInt)
-      t
-    }
-
-    def varint(buf: Array[Byte], off: Int): Option[(Long, Int)] = {
-      if (off >= buf.length) return None
-      var v = 0L
-      var i = 0
-      while (i < 8) {
-        if (off + i >= buf.length) return None
-        val b = buf(off + i) & 0xff
-        v = (v << 7) | (b & 0x7f)
-        if ((b & 0x80) == 0) return Some((v, i + 1))
-        i += 1
-      }
-      if (off + 8 >= buf.length) return None
-      Some(((v << 8) | (buf(off + 8) & 0xff), 9))
-    }
-
-    def localLen(payloadLen: Int): Int = {
-      if (usable <= 32) return math.min(payloadLen, math.max(usable - 4, 0))
-      val maxLocal = usable - 35
-      val minLocal = (usable - 12) * 32 / 255 - 23
-      if (payloadLen <= maxLocal) payloadLen
-      else {
-        var local = minLocal + (payloadLen - minLocal) % (usable - 4)
-        if (local > maxLocal) local = minLocal
-        local
-      }
-    }
-
-    val pageCount = (data.length + pageSize - 1) / pageSize
+    val image = SqliteFormat.image(data).getOrElse(return Seq.empty)
     val records = mutable.LinkedHashMap.empty[String, BrowserHistoryRecord]
-
-    def extractPayload(page: Array[Byte], cellOffset: Int): Option[Array[Byte]] = {
-      for {
-        (payloadLen64, lenSize) <- varint(page, cellOffset)
-        (_, rowidSize) <- varint(page, cellOffset + lenSize)
-        payloadLen = payloadLen64.toInt if payloadLen >= 0
-        payloadStart = cellOffset + lenSize + rowidSize
-        local = localLen(payloadLen)
-        if payloadStart + local <= page.length
-      } yield {
-        val out = new java.io.ByteArrayOutputStream(payloadLen)
-        out.write(page, payloadStart, local)
-        if (payloadLen > local) {
-          var remaining = payloadLen - local
-          val overflowPayload = math.max(usable - 4, 0)
-          var overflowPage =
-            if (payloadStart + local + 4 <= page.length) {
-              ((page(payloadStart + local) & 0xffL) << 24) |
-                ((page(payloadStart + local + 1) & 0xffL) << 16) |
-                ((page(payloadStart + local + 2) & 0xffL) << 8) |
-                (page(payloadStart + local + 3) & 0xffL)
-            } else 0L
-          while (overflowPage > 0 && remaining > 0) {
-            val off = ((overflowPage - 1) * pageSize).toInt
-            if (off < 0 || off + pageSize > data.length) { remaining = 0 }
-            else {
-              val next = ((data(off) & 0xffL) << 24) | ((data(off + 1) & 0xffL) << 16) |
-                ((data(off + 2) & 0xffL) << 8) | (data(off + 3) & 0xffL)
-              val take = math.min(remaining, overflowPayload)
-              out.write(data, off + 4, take)
-              remaining -= take
-              overflowPage = next
-            }
+    var page = 1L
+    while (page <= image.pagesPresent) {
+      if (image.pageType(page) == SqliteFormat.LeafTable) image.leafRecords(page) { rec =>
+        val texts = mutable.ArrayBuffer.empty[String]
+        val ints = mutable.ArrayBuffer.empty[Long]
+        var k = 0
+        while (k < rec.size) {
+          if (rec.length(k) <= MaxTextLen) rec.value(k) match {
+            case SqlInt(v) => ints += v
+            case SqlText(text) if text.trim.nonEmpty => texts += text
+            case _ => ()
           }
+          k += 1
         }
-        out.toByteArray
-      }
-    }
-
-    def parseRecordFields(payload: Array[Byte]): (Seq[String], Seq[Long]) = {
-      val texts = mutable.ArrayBuffer.empty[String]
-      val ints = mutable.ArrayBuffer.empty[Long]
-      varint(payload, 0).foreach { case (headerSize64, headerLen) =>
-        val headerSize = headerSize64.toInt
-        if (headerSize >= headerLen && headerSize <= payload.length) {
-          val serials = mutable.ArrayBuffer.empty[Long]
-          var pos = headerLen
-          var ok = true
-          while (ok && pos < headerSize) {
-            varint(payload, pos) match {
-              case Some((s, n)) => serials += s; pos += n
-              case None => ok = false; serials.clear()
-            }
+        val found = texts.toSeq
+        val urls = found.flatMap(extractUrls)
+        if (urls.nonEmpty) {
+          val title = chooseTitle(found, urls)
+          val visitTime = ints.collectFirst {
+            case v if TimeConv.plausibleMicros(v - TimeConv.WebkitToUnixMicros, nowMicros) =>
+              TimeConv.microTimestamp(v - TimeConv.WebkitToUnixMicros)
+            case v if TimeConv.plausibleMicros(v, nowMicros) => TimeConv.microTimestamp(v)
           }
-          var dataPos = headerSize
-          var aligned = true // stop at the first overrun: advancing past it
-                             // would decode every later serial misaligned
-          serials.foreach { serial =>
-            if (aligned && dataPos <= payload.length) {
-              val (len, isText): (Int, Boolean) = serial match {
-                case 0 | 8 | 9 | 10 | 11 => (0, false)
-                case 1 => (1, false); case 2 => (2, false); case 3 => (3, false)
-                case 4 => (4, false); case 5 => (6, false); case 6 => (8, false)
-                case 7 => (8, false)
-                case s if s < 12 => (0, false)
-                case s if s % 2 == 0 => (((s - 12) / 2).toInt, false)
-                case s => (((s - 13) / 2).toInt, true)
-              }
-              val nextPos = dataPos + len
-              if (nextPos <= payload.length && nextPos >= dataPos) {
-                if (Set(1L, 2L, 3L, 4L, 5L, 6L).contains(serial) && len > 0) {
-                  var v = if ((payload(dataPos) & 0x80) != 0) -1L else 0L
-                  var i = 0
-                  while (i < len) { v = (v << 8) | (payload(dataPos + i) & 0xff); i += 1 }
-                  ints += v
-                } else if (serial == 8) ints += 0L
-                else if (serial == 9) ints += 1L
-                if (isText && len > 0 && len <= MaxTextLen) {
-                  val text = new String(payload, dataPos, len, "UTF-8")
-                  if (text.trim.nonEmpty) texts += text
-                }
-                dataPos = nextPos
-              } else aligned = false
+          urls.foreach { url =>
+            records.get(url) match {
+              case Some(existing) =>
+                records(url) = existing.copy(
+                  title = existing.title.orElse(title),
+                  visitTime = existing.visitTime.orElse(visitTime))
+              case None =>
+                records(url) = BrowserHistoryRecord(runId, "sqlite_page", "unknown",
+                  Some(url), title, visitTime, None, Some("page_scan"), sourceFile)
             }
           }
         }
       }
-      (texts.toSeq, ints.toSeq)
+      page += 1
     }
-
-    var pageIndex = 0
-    while (pageIndex < pageCount) {
-      val offset = pageIndex * pageSize
-      val toRead = math.min(pageSize, data.length - offset)
-      val headerOffset = if (pageIndex == 0) 100 else 0
-      if (toRead >= headerOffset + 8 && (data(offset + headerOffset) & 0xff) == 0x0d) {
-        val page = java.util.Arrays.copyOfRange(data, offset, offset + toRead)
-        val cellCount = ((page(headerOffset + 3) & 0xff) << 8) | (page(headerOffset + 4) & 0xff)
-        val ptrStart = headerOffset + 8
-        var c = 0
-        while (c < cellCount && ptrStart + c * 2 + 1 < page.length) {
-          val cellOffset = ((page(ptrStart + c * 2) & 0xff) << 8) | (page(ptrStart + c * 2 + 1) & 0xff)
-          if (cellOffset < page.length) {
-            extractPayload(page, cellOffset).foreach { payload =>
-              val (texts, ints) = parseRecordFields(payload)
-              if (texts.nonEmpty) {
-                val urls = texts.flatMap(extractUrls)
-                if (urls.nonEmpty) {
-                  val title = chooseTitle(texts, urls)
-                  val visitTime = ints.collectFirst {
-                    case v if plausible(v - WebkitOffsetMicros) => microTs(v - WebkitOffsetMicros)
-                    case v if plausible(v) => microTs(v)
-                  }
-                  urls.foreach { url =>
-                    records.get(url) match {
-                      case Some(existing) =>
-                        records(url) = existing.copy(
-                          title = existing.title.orElse(title),
-                          visitTime = existing.visitTime.orElse(visitTime))
-                      case None =>
-                        records(url) = BrowserHistoryRecord(runId, "sqlite_page", "unknown",
-                          Some(url), title, visitTime, None, Some("page_scan"), sourceFile)
-                    }
-                  }
-                }
-              }
-            }
-          }
-          c += 1
-        }
-      }
-      pageIndex += 1
-    }
-
-
     records.values.toSeq
   }
 

@@ -303,36 +303,6 @@ object IndexIngest {
     } finally parsed.foreach(_.unpersist())
   }
 
-  /** Start the streaming archive ingest: `manifest` is a streaming
-    * frame whose `pathCol` rows name WARC archives (a file-source over
-    * a manifest drop directory, or any stream of paths). Every
-    * [[processWarcBatch]] knob passes through — the streaming entry
-    * point is NOT locked to the batch API's defaults (a crawl whose
-    * records exceed the default payload cap re-caps HERE, and the ANN
-    * leg wires through `annIndexDir`/`vecCol`/`embed` exactly as in
-    * batch).
-    */
-  def startWarc(manifest: DataFrame, pathCol: String, idExpr: String,
-                textExpr: String, dedupIndexDir: String,
-                bm25IndexDir: Option[String], checkpoint: String,
-                quarantineDir: Option[String] = None,
-                dropNear: Boolean = true,
-                compactEvery: Int = 0,
-                warcChunkSize: Long = 64L * 1024 * 1024,
-                maxPayloadBytes: Int = 4 * 1024 * 1024,
-                annIndexDir: Option[String] = None,
-                vecCol: Option[String] = None,
-                embed: DataFrame => DataFrame = identity): StreamingQuery =
-    manifest.writeStream
-      .option("checkpointLocation", checkpoint)
-      .foreachBatch { (batch: DataFrame, batchId: Long) =>
-        processWarcBatch(batch, batchId, pathCol, idExpr, textExpr,
-          dedupIndexDir, bm25IndexDir, quarantineDir, dropNear, compactEvery,
-          warcChunkSize, maxPayloadBytes, annIndexDir, vecCol, embed)
-        ()
-      }
-      .start()
-
   private val FrontierLedgerName = "_graft_frontier_ledger"
 
   /** Process one crawl-DISCOVERY micro-batch: `batch` carries fetched
@@ -555,31 +525,6 @@ object IndexIngest {
     }
   }
 
-  /** Start the streaming discovery loop over a stream of fetched
-    * pages.
-    */
-  def startDiscovery(pages: DataFrame, urlCol: String, htmlCol: String,
-                     frontierDir: String, checkpoint: String,
-                     outManifestDir: Option[String] = None,
-                     robots: Option[(DataFrame, String, String)] = None,
-                     agent: String = "*",
-                     perDomainCap: Option[Int] = None,
-                     resolveRelative: Boolean = false,
-                     scheduleDelays: Option[Double] = None,
-                     harvestSitemaps: Boolean = false,
-                     normalizeKeys: Boolean = false,
-                     hostPriority: Option[(DataFrame, String, String)] = None): StreamingQuery =
-    pages.writeStream
-      .option("checkpointLocation", checkpoint)
-      .foreachBatch { (batch: DataFrame, batchId: Long) =>
-        processDiscoveryBatch(batch, batchId, urlCol, htmlCol,
-          frontierDir, outManifestDir, robots, agent, perDomainCap,
-          resolveRelative, scheduleDelays, harvestSitemaps, normalizeKeys,
-          hostPriority)
-        ()
-      }
-      .start()
-
   private val DeleteLedgerName = "_graft_takedown_ledger"
 
   /** Process one TAKEDOWN micro-batch — the delete-side twin of
@@ -635,20 +580,4 @@ object IndexIngest {
     }
     ids.length.toLong
   }
-
-  /** Start the streaming takedown: `ids` is a streaming frame carrying
-    * the doc ids to delete.
-    */
-  def startDeletes(ids: DataFrame, idCol: String, bm25IndexDir: String,
-                   annIndexDir: Option[String], checkpoint: String,
-                   compactEvery: Int = 0,
-                   dedupIndexDir: Option[String] = None): StreamingQuery =
-    ids.writeStream
-      .option("checkpointLocation", checkpoint)
-      .foreachBatch { (batch: DataFrame, batchId: Long) =>
-        processDeleteBatch(batch, batchId, idCol, bm25IndexDir,
-          annIndexDir, compactEvery, dedupIndexDir)
-        ()
-      }
-      .start()
 }

@@ -76,6 +76,22 @@ class CarveTailSpec extends AnyFunSuite {
     }
   }
 
+  test("a carve whose planned extent is under min_size never reaches the payload sink") {
+    val cases: Seq[(Long => CarveHandler, Array[Byte], String, Int)] = Seq(
+      ((min: Long) => new JpegCarver(0, min), gradientImage("jpeg", 64, 64, 3), "p", 0),
+      ((min: Long) => new BmpCarver(0, min), bmp(64, 64), "p", 0)) ++
+      WalkerSamples.all.map(w => ((min: Long) => w.make(0, min), w.bytes, w.patternId, w.hitDelta))
+    cases.foreach { case (make, sample, patternId, hitDelta) =>
+      val (evidence, start) = planted(sample)
+      var sunk = 0L
+      val ctx = ExtractionContext("t", new InMemoryEvidence(evidence), Some((_, _, n) => sunk += n))
+      val handler = make(1L << 20) // every sample is far smaller
+      assert(handler.processHit(CarveHit(start + hitDelta, handler.fileType, patternId), ctx).isEmpty,
+        s"${handler.fileType}: carved under min_size")
+      assert(sunk == 0, s"${handler.fileType}: $sunk bytes sent to the payload sink")
+    }
+  }
+
   /** The search for each carver's terminator reads 64 KiB windows from
     * `searchFrom` bytes past the hit; `build(fill)` makes a sample whose
     * terminator starts `fill` bytes after its prefix. Every split of the

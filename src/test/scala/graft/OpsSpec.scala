@@ -122,15 +122,6 @@ class OpsSpec extends AnyFunSuite with BeforeAndAfterAll {
     assert(bad.collect().exists(!_._2))
   }
 
-  test("config hash is stable and sensitive") {
-    val a = EngineConfig()
-    val b = EngineConfig()
-    assert(a.configHash == b.configHash)
-    assert(a.configHash.length == 64)
-    assert(a.copy(overlap = 1234).configHash != a.configHash)
-    assert(a.copy(fileTypes = a.fileTypes.filterNot(_.id == "zip")).configHash != a.configHash)
-  }
-
   test("progress listener emits percent/MiB-s/ETA events during a pipeline run") {
     import graft.pipeline.{ProgressEvent, ProgressListener}
     val evidence = new Array[Byte](64 * 1024)

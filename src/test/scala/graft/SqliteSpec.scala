@@ -10,11 +10,13 @@ import org.scalatest.funsuite.AnyFunSuite
   */
 class SqliteSpec extends AnyFunSuite {
 
-  private def fixture(name: String): SqliteFile = {
+  private def fixtureBytes(name: String): Array[Byte] = {
     val in = getClass.getResourceAsStream(s"/fixtures/$name")
     assert(in != null, s"fixture $name missing")
-    new SqliteFile(in.readAllBytes())
+    in.readAllBytes()
   }
+
+  private def fixture(name: String): SqliteFile = new SqliteFile(fixtureBytes(name))
 
   private val WebkitBase = 13303449600000000L
   private val UnixBaseUs = 1700000000000000L
@@ -130,5 +132,158 @@ class SqliteSpec extends AnyFunSuite {
     val recs = SqlitePages.extractHistory(in.readAllBytes(), "r", "src")
     assert(recs.isEmpty) // long text contains no URLs
     assert(SqlitePages.extractHistory("garbage".getBytes, "r", "src").isEmpty)
+  }
+
+  // ---- every reader's output, pinned per fixture and corruption ----
+
+  private val Fixtures = Seq("chrome_cookies", "chrome_history", "firefox_cookies",
+    "firefox_downloads", "firefox_places", "overflow")
+
+  private val PageSize = 512 // every fixture's
+
+  private def u16(b: Array[Byte], off: Int): Int = ((b(off) & 0xff) << 8) | (b(off + 1) & 0xff)
+
+  /** Offset of the record header of the first cell on the last
+    * table-leaf page whose payload length and record-header length are
+    * one-byte varints.
+    */
+  private def lastSmallRecord(b: Array[Byte]): Int =
+    (b.length / PageSize - 1 to 0 by -1).iterator.flatMap { p =>
+      val hdr = p * PageSize + (if (p == 0) 100 else 0)
+      if ((b(hdr) & 0xff) != 0x0d || u16(b, hdr + 3) == 0) None
+      else {
+        val cell = p * PageSize + u16(b, hdr + 8)
+        var at = cell + 1
+        while ((b(at) & 0x80) != 0) at += 1 // the rowid varint
+        if ((b(cell) & 0x80) == 0 && (b(at + 1) & 0x80) == 0) Some(at + 1) else None
+      }
+    }.next()
+
+  private def withByte(b: Array[Byte], off: Int, v: Int): Array[Byte] = {
+    val out = b.clone(); out(off) = v.toByte; out
+  }
+
+  /** Each fixture as is and with one corruption: cut inside its last page
+    * (for overflow.sqlite that is inside its overflow chain), cut at a
+    * page boundary, a record header that claims more bytes than its
+    * payload (0x7f), and a first field of reserved serial type 10.
+    */
+  private val Corruptions: Seq[(String, Array[Byte] => Array[Byte])] = Seq(
+    "whole" -> (b => b),
+    "cut_in_last_page" -> (b => b.take(b.length - PageSize / 2)),
+    "cut_at_page" -> (b => b.take(b.length / PageSize / 2 * PageSize)),
+    "header_overrun" -> (b => withByte(b, lastSmallRecord(b), 0x7f)),
+    "serial_10" -> (b => withByte(b, lastSmallRecord(b) + 1, 10)))
+
+  /** A record's fields in one line; timestamps as millis.nanos. */
+  private def canon(p: Product): String = p.productIterator.map {
+    case Some(t: java.sql.Timestamp) => s"${t.getTime}.${t.getNanos}"
+    case other => other.toString
+  }.mkString("|")
+
+  private def digest(recs: Seq[Product]): String =
+    s"${recs.length}:" + graft.fixtures.FixtureBytes.sha256Hex(recs.map(canon).mkString("\n").getBytes("UTF-8")).take(10)
+
+  /** What every reader makes of `bytes`: readTable's row count per table,
+    * then count:digest of BrowserExtract's history (h), cookies (c) and
+    * downloads (d) and of the page scan (p). `!` marks a throw.
+    */
+  private def readersSay(bytes: Array[Byte]): String = {
+    def attempt(f: => String): String = try f catch { case _: Exception => "!" }
+    val viaDb = try {
+      val db = new SqliteFile(bytes)
+      Seq(
+        attempt(db.masterRows.filter(_._1 == "table")
+          .map(t => s"${t._2}=${attempt(db.readTable(t._2).length.toString)}").mkString(",")),
+        "h" + attempt(digest(BrowserExtract.history(db, "r", "s"))),
+        "c" + attempt(digest(BrowserExtract.cookies(db, "r", "s"))),
+        "d" + attempt(digest(BrowserExtract.downloads(db, "r", "s")))).mkString(" ")
+    } catch { case _: Exception => "open!" }
+    s"$viaDb p" + digest(SqlitePages.extractHistory(bytes, "r", "s", nowMicros = 1800000000000000L))
+  }
+
+  private val Pinned: Map[String, String] = Map(
+    "chrome_cookies/whole" -> "cookies=20 h0:e3b0c44298 c20:c0fb413fb0 d0:e3b0c44298 p0:e3b0c44298",
+    "chrome_cookies/cut_in_last_page" -> "cookies=14 h0:e3b0c44298 c14:44dc1f571c d0:e3b0c44298 p0:e3b0c44298",
+    "chrome_cookies/cut_at_page" -> "cookies=0 h0:e3b0c44298 c0:e3b0c44298 d0:e3b0c44298 p0:e3b0c44298",
+    "chrome_cookies/header_overrun" -> "cookies=! h0:e3b0c44298 c! d0:e3b0c44298 p0:e3b0c44298",
+    "chrome_cookies/serial_10" -> "cookies=! h0:e3b0c44298 c! d0:e3b0c44298 p0:e3b0c44298",
+    "chrome_history/whole" -> "urls=20,visits=20,downloads=10,downloads_url_chains=10 h20:23b30127c7 c0:e3b0c44298 d10:b34caa5468 p34:4dd72bafa8",
+    "chrome_history/cut_in_last_page" -> "urls=20,visits=20,downloads=8,downloads_url_chains=10 h20:23b30127c7 c0:e3b0c44298 d8:ea2bd9dd39 p33:82895c55c9",
+    "chrome_history/cut_at_page" -> "urls=0,visits=20,downloads=0 h0:e3b0c44298 c0:e3b0c44298 d0:e3b0c44298 p10:d809cd6883",
+    "chrome_history/header_overrun" -> "urls=20,visits=20,downloads=!,downloads_url_chains=10 h20:23b30127c7 c0:e3b0c44298 d! p34:4dd72bafa8",
+    "chrome_history/serial_10" -> "urls=20,visits=20,downloads=!,downloads_url_chains=10 h20:23b30127c7 c0:e3b0c44298 d! p34:4dd72bafa8",
+    "firefox_cookies/whole" -> "moz_cookies=20 h0:e3b0c44298 c20:4ee6a0af64 d0:e3b0c44298 p0:e3b0c44298",
+    "firefox_cookies/cut_in_last_page" -> "moz_cookies=14 h0:e3b0c44298 c14:4b2391d505 d0:e3b0c44298 p0:e3b0c44298",
+    "firefox_cookies/cut_at_page" -> "moz_cookies=0 h0:e3b0c44298 c0:e3b0c44298 d0:e3b0c44298 p0:e3b0c44298",
+    "firefox_cookies/header_overrun" -> "moz_cookies=! h0:e3b0c44298 c! d0:e3b0c44298 p0:e3b0c44298",
+    "firefox_cookies/serial_10" -> "moz_cookies=! h0:e3b0c44298 c! d0:e3b0c44298 p0:e3b0c44298",
+    "firefox_downloads/whole" -> "moz_downloads=10 h0:e3b0c44298 c0:e3b0c44298 d10:abf9cda62e p10:971f9e97b3",
+    "firefox_downloads/cut_in_last_page" -> "moz_downloads=7 h0:e3b0c44298 c0:e3b0c44298 d7:2a88353728 p7:3ed9dc2e67",
+    "firefox_downloads/cut_at_page" -> "moz_downloads=0 h0:e3b0c44298 c0:e3b0c44298 d0:e3b0c44298 p0:e3b0c44298",
+    "firefox_downloads/header_overrun" -> "moz_downloads=! h0:e3b0c44298 c0:e3b0c44298 d! p9:f5347ca753",
+    "firefox_downloads/serial_10" -> "moz_downloads=! h0:e3b0c44298 c0:e3b0c44298 d! p10:971f9e97b3",
+    "firefox_places/whole" -> "moz_places=20,moz_historyvisits=20 h20:d391ce095e c0:e3b0c44298 d0:e3b0c44298 p20:124ccf44ba",
+    "firefox_places/cut_in_last_page" -> "moz_places=18,moz_historyvisits=20 h18:3cd16cb462 c0:e3b0c44298 d0:e3b0c44298 p18:e7ed8007d4",
+    "firefox_places/cut_at_page" -> "moz_places=0,moz_historyvisits=20 h0:e3b0c44298 c0:e3b0c44298 d0:e3b0c44298 p0:e3b0c44298",
+    "firefox_places/header_overrun" -> "moz_places=!,moz_historyvisits=20 h! c0:e3b0c44298 d0:e3b0c44298 p19:21d03723f5",
+    "firefox_places/serial_10" -> "moz_places=!,moz_historyvisits=20 h! c0:e3b0c44298 d0:e3b0c44298 p20:124ccf44ba",
+    "overflow/whole" -> "blobs=1 h0:e3b0c44298 c0:e3b0c44298 d0:e3b0c44298 p0:e3b0c44298",
+    "overflow/cut_in_last_page" -> "blobs=! h0:e3b0c44298 c0:e3b0c44298 d0:e3b0c44298 p0:e3b0c44298",
+    "overflow/cut_at_page" -> "blobs=! h0:e3b0c44298 c0:e3b0c44298 d0:e3b0c44298 p0:e3b0c44298",
+    "overflow/header_overrun" -> "! h! c! d! p0:e3b0c44298",
+    "overflow/serial_10" -> "! h! c! d! p0:e3b0c44298")
+
+  test("every reader gives the pinned output for every fixture and corruption") {
+    val seen = for (f <- Fixtures; (name, corrupt) <- Corruptions)
+      yield s"$f/$name" -> readersSay(corrupt(fixtureBytes(s"$f.sqlite")))
+    val wrong = seen.filterNot { case (k, v) => Pinned.get(k).contains(v) }
+    assert(wrong.isEmpty, wrong.map { case (k, v) => s"\n    \"$k\" -> \"$v\"," }.mkString)
+  }
+
+  /** `page`'s first cell rewritten into the page's free space with a
+    * non-minimal 9-byte payload length of about 64 MiB and no overflow
+    * chain; its first 39 payload bytes (the local part for that length)
+    * are kept.
+    */
+  private def hugePayloadCell(b: Array[Byte], page: Int): Array[Byte] = {
+    val out = b.clone()
+    val base = (page - 1) * PageSize
+    val cell = base + u16(b, base + 8)
+    var at = cell
+    while ((b(at) & 0x80) != 0) at += 1 // old payload-length varint
+    val rowidStart = at + 1
+    at = rowidStart
+    while ((b(at) & 0x80) != 0) at += 1
+    val payloadStart = at + 1
+    val minLocal = (PageSize - 12) * 32 / 255 - 23 // 39: the local part of this length
+    val declared = minLocal + (PageSize - 4) * 132000L
+    val nine = Array.tabulate[Byte](9)(i =>
+      if (i == 8) declared.toByte else (0x80 | ((declared >>> (8 + 7 * (7 - i))) & 0x7f)).toByte)
+    val moved = nine ++ b.slice(rowidStart, payloadStart) ++
+      b.slice(payloadStart, payloadStart + minLocal) ++ new Array[Byte](4)
+    val to = u16(b, base + 5) - moved.length // just below the cell content area
+    assert(to >= 8 + 2 * u16(b, base + 3), "no free space for the moved cell")
+    System.arraycopy(moved, 0, out, base + to, moved.length)
+    out(base + 8) = (to >> 8).toByte; out(base + 9) = to.toByte
+    out(base + 5) = (to >> 8).toByte; out(base + 6) = to.toByte
+    out
+  }
+
+  test("a cell declaring a huge payload allocates within the database's own length") {
+    // page 12 is a downloads leaf with room below its cell content area
+    val bytes = hugePayloadCell(fixtureBytes("chrome_history.sqlite"), page = 12)
+    val limit = 4L * 1024 * 1024
+    val (failed, viaDb) = WalkerSamples.allocatedBytes {
+      val db = new SqliteFile(bytes)
+      db.masterRows.filter(_._1 == "table").map { t =>
+        try { db.readTable(t._2); None } catch { case _: SqliteParseException => Some(t._2) }
+      }.flatten
+    }
+    assert(failed == Seq("downloads"))
+    assert(viaDb < limit, s"table reader allocated $viaDb bytes")
+    val (recs, viaPages) = WalkerSamples.allocatedBytes(SqlitePages.extractHistory(bytes, "r", "s"))
+    assert(recs.nonEmpty)
+    assert(viaPages < limit, s"page scan allocated $viaPages bytes")
   }
 }
