@@ -169,16 +169,17 @@ object Carve {
         val fmt = if (backend == "parquet") "parquet" else "json"
         def browser(dir: String, df: => DataFrame) = Stream(dir, fmt, () =>
           df.repartition(1).sortWithinPartitions("source_file"))
+        // one persisted browser pass (records only) feeds the three browser streams
+        val browserDbs = result.hold(SqliteArtefacts.records(ref, carvedOut, runId, cfg.sqlitePageRecovery))
         MetadataSinks.write(spark, outDir, carvedOut,
           MetadataSinks.carveStreams(spark, backend, carvedOut, result.artefacts,
             result.entropyRegions, info) ++ Seq(
-            browser("browser_history", MetadataSinks.browserHistoryDf(spark,
-              SqliteArtefacts.history(spark, ref, carvedOut, runId,
-                pageRecovery = cfg.sqlitePageRecovery), info)),
-            browser("browser_cookies", MetadataSinks.browserCookiesDf(spark,
-              SqliteArtefacts.cookies(spark, ref, carvedOut, runId), info)),
-            browser("browser_downloads", MetadataSinks.browserDownloadsDf(spark,
-              SqliteArtefacts.downloads(spark, ref, carvedOut, runId), info)),
+            browser("browser_history",
+              MetadataSinks.browserHistoryDf(spark, browserDbs.flatMap(_.history), info)),
+            browser("browser_cookies",
+              MetadataSinks.browserCookiesDf(spark, browserDbs.flatMap(_.cookies), info)),
+            browser("browser_downloads",
+              MetadataSinks.browserDownloadsDf(spark, browserDbs.flatMap(_.downloads), info)),
             Stream("run_summary", fmt, () => MetadataSinks.runSummaryDf(spark,
               Seq(CarvePipeline.summarize(spark, runId, result.copy(carvedFiles = carvedOut))).toDS(),
               info))))

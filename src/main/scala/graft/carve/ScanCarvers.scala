@@ -109,7 +109,7 @@ object Scan {
   /** Tail of the carve-until-pattern carvers (gzip, bzip2, xz): validated
     * when the search found the end, or at EOF when `eofValidates`; an end
     * at `maxEnd` is flagged with `maxError` (also when a terminator ends
-    * exactly there).
+    * exactly there), an end at the evidence end never is.
     */
   def finishUntil(handler: CarveHandler, ctx: ExtractionContext, hit: CarveHit,
       minSize: Long, maxSize: Long, stop: Stop, eofValidates: Boolean,
@@ -119,7 +119,7 @@ object Scan {
       case AtEof(_) => eofValidates
       case AtMax(_) => false
     }
-    val cut = maxSize > 0 && stop.at >= maxEnd(hit.globalOffset, maxSize)
+    val cut = !stop.isInstanceOf[AtEof] && maxSize > 0 && stop.at >= maxEnd(hit.globalOffset, maxSize)
     CarveOps.finish(ctx, hit, handler.fileType, handler.extension, hit.globalOffset, stop.at, minSize,
       validated, truncated = cut, errors = if (cut) Seq(maxError) else Nil, eofError = eofError)
   }
@@ -263,7 +263,8 @@ final class XzCarver(val maxSize: Long, val minSize: Long, val extension: String
       }
       end
     } match {
-      case Scan.AtEof(_) => Scan.AtMax(maxEnd) // no footer: carve on to max_end (xz.rs)
+      // no footer: carve on to max_end (xz.rs); the copy meets the evidence end first
+      case Scan.AtEof(_) => Scan.AtEof(maxEnd)
       case other => other
     }
     Scan.finishUntil(this, ctx, hit, minSize, maxSize, stop, eofValidates = false,

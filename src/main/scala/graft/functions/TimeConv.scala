@@ -44,9 +44,6 @@ object TimeConv {
     * (reference src/parsers/sqlite_pages.rs:318-326):
     * 1990-01-01 ≤ t ≤ now + 2 days. `nowMicros` injected for determinism.
     */
-  def plausibleMicros(c: Column, nowMicros: Long): Column =
-    c.geq(lit(MinPlausibleMicros)) && c.leq(lit(nowMicros + PlausibleSlackMicros))
-
   def plausibleMicros(us: Long, nowMicros: Long): Boolean =
     us >= MinPlausibleMicros && us <= nowMicros + PlausibleSlackMicros
 

@@ -739,6 +739,8 @@ object TextAnalysis {
     * shuffle volume = nBuckets), one broadcast join onto the in-row
     * bucketed bigram stream, one id-keyed sum. Output: (id, n_bigrams,
     * dsir_micro); resample by dsir_micro rank to select.
+    * Eager: the call runs one collect of the weight table, caching both
+    * model tables for it only, so no persisted RDD outlives the call.
     */
   def dsirWeights(raw: DataFrame, target: DataFrame, idCol: String, textCol: String,
       nBuckets: Int = 256): DataFrame = {
@@ -750,14 +752,12 @@ object TextAnalysis {
       .filter(size(col("graft_ws")) >= 2)
       .select(col("id"), explode(expr(
         s"transform(sequence(0, size(graft_ws) - 2), i -> $bucketExpr)")).as("bucket"))
-    // per-corpus bucket counts — bounded tables (<= nBuckets rows); the
-    // bounded model tables each feed the totals agg and the weight
-    // join. Cache lifecycle: [[CacheRegistry]] — release after
-    // materializing.
+    // per-corpus bucket counts — bounded tables (<= nBuckets rows), each
+    // feeding the totals agg and the weight join of the collect below
     def model(b: DataFrame, cName: String) =
       b.groupBy(col("bucket")).agg(count(lit(1)).as(cName))
-    val tgt = CacheRegistry.persist(model(bucketed(target), "c_t"))
-    val rawM = CacheRegistry.persist(model(bucketed(raw), "c_r"))
+    val tgt = model(bucketed(target), "c_t").persist()
+    val rawM = model(bucketed(raw), "c_r").persist()
     val totals = tgt.agg(sum(col("c_t")).as("n_t")).crossJoin(rawM.agg(sum(col("c_r")).as("n_r")))
     // add-one smoothed log-ratio per bucket in micro-nats, rounded once
     val weights = rawM.join(tgt, Seq("bucket"), "full")
@@ -777,8 +777,9 @@ object TextAnalysis {
     // is present in the map (the full join keeps the c_r side), so the
     // lookup is total; integer sums are order-free, so dsir_micro is
     // identical.
-    val wmap = typedLit(weights.collect()
-      .map(r => r.getLong(0) -> r.getLong(1)).toMap)
+    val wmap = typedLit(
+      try weights.collect().map(r => r.getLong(0) -> r.getLong(1)).toMap
+      finally { tgt.unpersist(); rawM.unpersist() })
     raw.select(col(idCol).as("id"), split(col(textCol), " ").as("graft_ws"))
       .filter(size(col("graft_ws")) >= 2)
       .withColumn("graft_wm", wmap)

@@ -90,8 +90,11 @@ object CarvePipeline {
       entropyRegions: Dataset[EntropyRegion],
       observation: org.apache.spark.sql.Observation,
       carveErrors: org.apache.spark.util.LongAccumulator) {
-    /** Drop both persisted stages once outputs are materialized. */
-    def release(): Unit = { carvedFiles.unpersist(); scanned.unpersist() }
+    private val held = new java.util.concurrent.ConcurrentLinkedQueue[Dataset[_]]()
+    /** Persist a dataset built over this run's outputs until [[release]]. */
+    def hold[T](ds: Dataset[T]): Dataset[T] = { held.add(ds.persist(StorageLevel.MEMORY_AND_DISK)); ds }
+    /** Drop both persisted stages and what [[hold]] persisted once outputs are materialized. */
+    def release(): Unit = { held.forEach(_.unpersist()); carvedFiles.unpersist(); scanned.unpersist() }
   }
 
   /** Close a task-held resource when the task finishes: mapPartitions

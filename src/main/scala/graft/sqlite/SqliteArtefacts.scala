@@ -2,13 +2,14 @@ package graft.sqlite
 
 import graft.core.{BrowserCookieRecord, BrowserDownloadRecord, BrowserHistoryRecord, CarvedFile}
 import graft.evidence.EvidenceRef
-import org.apache.spark.sql.{Dataset, Encoder, SparkSession}
+import org.apache.spark.sql.{DataFrame, Dataset, Encoders, SparkSession}
 
-/** Distributed browser-artefact stage: for every carved SQLite file,
-  * re-read its byte range from the evidence and run the pure-Scala
-  * extractor (reference pipeline stage: workers.rs:269-279 + 300-368).
-  * The carved-sqlite set is tiny relative to the evidence, so three
-  * narrow passes (history/cookies/downloads) are cheap; each task opens
+/** Distributed browser-artefact stage (reference pipeline stage:
+  * workers.rs:269-279 + 300-368): [[records]] reads each carved SQLite
+  * file from the evidence once, parses it once and runs the history,
+  * cookie and download extractors over that parse; [[history]],
+  * [[cookies]], [[downloads]] and [[timeline]] are projections of it. The
+  * carved-sqlite set is tiny relative to the evidence; each task opens
   * its own evidence handle.
   */
 object SqliteArtefacts {
@@ -19,73 +20,59 @@ object SqliteArtefacts {
     */
   private val MaxDbBytes: Long = Int.MaxValue.toLong
 
-  /** The one loader behind all three browser streams: every carved
-    * SQLite within [[MaxDbBytes]] is re-read from the evidence and
-    * parsed, and `rows` gets its raw bytes (history's page recovery
-    * scans them) with the parse, None when it does not parse. A short
-    * read yields no rows.
+  /** One carved database's browser records. */
+  final case class BrowserRecords(history: Seq[BrowserHistoryRecord], cookies: Seq[BrowserCookieRecord],
+      downloads: Seq[BrowserDownloadRecord])
+
+  /** One row per carved SQLite within [[MaxDbBytes]] that reads whole. A
+    * database that does not parse, or an extractor that throws, yields no
+    * records for that family only. With `pageRecovery` (reference
+    * enable_sqlite_page_recovery, pipeline/workers.rs:319-326) a database
+    * whose table-level history is empty falls back to the tolerant
+    * page-leaf scan over the same bytes.
     */
-  private def fromDbs[T: Encoder](evidenceRef: EvidenceRef, carved: Dataset[CarvedFile])(
-      rows: (CarvedFile, Array[Byte], Option[SqliteFile]) => Seq[T]): Dataset[T] =
+  def records(evidenceRef: EvidenceRef, carved: Dataset[CarvedFile], runId: String,
+              pageRecovery: Boolean = false): Dataset[BrowserRecords] =
     carved.filter(c => c.fileType == "sqlite" && c.size <= MaxDbBytes).flatMap { c =>
       val reader = evidenceRef.open()
       val bytes = try reader.readExactAt(c.globalStart, c.size.toInt) finally reader.close()
-      bytes.toSeq.flatMap { b =>
-        rows(c, b, try Some(new SqliteFile(b)) catch { case _: Exception => None })
+      bytes.map { b =>
+        val db = try Some(new SqliteFile(b)) catch { case _: Exception => None }
+        def family[T](extract: SqliteFile => Seq[T]): Seq[T] =
+          db.toSeq.flatMap(d => try extract(d) catch { case _: Exception => Seq.empty })
+        val history = family(BrowserExtract.history(_, runId, c.path))
+        BrowserRecords(
+          if (history.nonEmpty || !pageRecovery) history else SqlitePages.extractHistory(b, runId, c.path),
+          family(BrowserExtract.cookies(_, runId, c.path)),
+          family(BrowserExtract.downloads(_, runId, c.path)))
       }
-    }
+    }(Encoders.product)
 
-  /** One extractor's records; a parse or extractor failure yields none. */
-  private def extracted[T](db: Option[SqliteFile])(extract: SqliteFile => Seq[T]): Seq[T] =
-    db.toSeq.flatMap(d => try extract(d) catch { case _: Exception => Seq.empty })
-
-  /** With `pageRecovery` (reference enable_sqlite_page_recovery,
-    * pipeline/workers.rs:319-326): a DB whose table-level parse yields
-    * no records falls back to the tolerant page-leaf scan.
-    */
   def history(spark: SparkSession, evidenceRef: EvidenceRef, carved: Dataset[CarvedFile],
-              runId: String, pageRecovery: Boolean = false): Dataset[BrowserHistoryRecord] = {
-    import spark.implicits._
-    fromDbs(evidenceRef, carved) { (c, bytes, db) =>
-      val viaDb = extracted(db)(BrowserExtract.history(_, runId, c.path))
-      if (viaDb.nonEmpty || !pageRecovery) viaDb
-      else SqlitePages.extractHistory(bytes, runId, c.path)
-    }
-  }
+              runId: String, pageRecovery: Boolean = false): Dataset[BrowserHistoryRecord] =
+    records(evidenceRef, carved, runId, pageRecovery).flatMap(_.history)(Encoders.product)
 
-  def cookies(spark: SparkSession, evidenceRef: EvidenceRef, carved: Dataset[CarvedFile], runId: String): Dataset[BrowserCookieRecord] = {
-    import spark.implicits._
-    fromDbs(evidenceRef, carved)((c, _, db) => extracted(db)(BrowserExtract.cookies(_, runId, c.path)))
-  }
+  def cookies(spark: SparkSession, evidenceRef: EvidenceRef, carved: Dataset[CarvedFile], runId: String): Dataset[BrowserCookieRecord] =
+    records(evidenceRef, carved, runId).flatMap(_.cookies)(Encoders.product)
 
-  def downloads(spark: SparkSession, evidenceRef: EvidenceRef, carved: Dataset[CarvedFile], runId: String): Dataset[BrowserDownloadRecord] = {
-    import spark.implicits._
-    fromDbs(evidenceRef, carved)((c, _, db) => extracted(db)(BrowserExtract.downloads(_, runId, c.path)))
-  }
+  def downloads(spark: SparkSession, evidenceRef: EvidenceRef, carved: Dataset[CarvedFile], runId: String): Dataset[BrowserDownloadRecord] =
+    records(evidenceRef, carved, runId).flatMap(_.downloads)(Encoders.product)
 
   /** Unified activity timeline — the log2timeline-style view an
-    * investigator reads first: page visits, download starts, and cookie
-    * creations from every recovered profile DB merged into one
-    * stream of (event_time, kind, browser, detail) — UNORDERED; order
-    * by event_time at the consumer (a global sort here would force a
-    * range shuffle every caller pays whether or not it needs it). Rows
-    * whose source column was absent/null carry no event time and are
-    * dropped. Each artefact family is one extraction branch over the
-    * same carved set; union is narrow (no shuffle beyond the carve DAG
-    * itself).
+    * investigator reads first: page visits (detail: url), download starts
+    * (url, else target path) and cookie creations (`host|name`) from
+    * every recovered profile DB, as one stream of (event_time, kind,
+    * browser, detail) — UNORDERED; order by event_time at the consumer (a
+    * global sort here would force a range shuffle every caller pays
+    * whether or not it needs it). Records without a time are dropped. One
+    * narrow projection of [[records]].
     */
   def timeline(spark: SparkSession, evidenceRef: EvidenceRef,
-               carved: Dataset[CarvedFile], runId: String): org.apache.spark.sql.DataFrame = {
-    import org.apache.spark.sql.functions._
-    val h = history(spark, evidenceRef, carved, runId).toDF()
-      .select(col("visitTime").as("event_time"), lit("visit").as("kind"),
-        col("browser"), col("url").as("detail"))
-    val d = downloads(spark, evidenceRef, carved, runId).toDF()
-      .select(col("startTime").as("event_time"), lit("download").as("kind"),
-        col("browser"), coalesce(col("url"), col("targetPath")).as("detail"))
-    val c = cookies(spark, evidenceRef, carved, runId).toDF()
-      .select(col("creationUtc").as("event_time"), lit("cookie_created").as("kind"),
-        col("browser"), concat_ws("|", col("host"), col("name")).as("detail"))
-    h.unionByName(d).unionByName(c).filter(col("event_time").isNotNull)
-  }
+               carved: Dataset[CarvedFile], runId: String): DataFrame =
+    records(evidenceRef, carved, runId).flatMap { db =>
+      db.history.flatMap(h => h.visitTime.map((_, "visit", h.browser, h.url))) ++
+        db.downloads.flatMap(d => d.startTime.map((_, "download", d.browser, d.url.orElse(d.targetPath)))) ++
+        db.cookies.flatMap(c => c.creationUtc.map((_, "cookie_created", c.browser,
+          Option(Seq(c.host, c.name).flatten.mkString("|")))))
+    }(Encoders.product).toDF("event_time", "kind", "browser", "detail")
 }

@@ -40,9 +40,7 @@ final class SqliteFile(data: Array[Byte]) {
   private val image = SqliteFormat.image(data)
     .getOrElse(throw new IllegalArgumentException("not a sqlite main file: magic or page size invalid"))
 
-  val pageSize: Int = image.header.pageSize
-  val usableSize: Int = image.header.usableSize
-  val pageCount: Int = image.pageCount.toInt
+  private val pageCount: Int = image.pageCount.toInt
 
   /** Walk a table b-tree from its root page; emits (rowid, values). */
   def tableRows(rootPage: Long): Seq[(Long, IndexedSeq[SqlValue])] = {

@@ -114,6 +114,17 @@ class CacheHygieneSpec extends AnyFunSuite with BeforeAndAfterAll {
       "cmsHeavyHitters must drop its vocabulary cache before returning")
   }
 
+  test("dsirWeights is self-contained") {
+    import spark.implicits._
+    val docs = (1L to 30L).map(i => (i, if (i % 3 == 0) s"alpha beta gamma t$i" else s"delta eps zeta r$i"))
+      .toDF("id", "text")
+    val before = spark.sparkContext.getPersistentRDDs.keySet
+    val out = TextAnalysis.dsirWeights(docs, docs.filter(col("id") % 3 === 0), "id", "text", nBuckets = 64)
+    val left = spark.sparkContext.getPersistentRDDs.keySet -- before
+    assert(left.isEmpty, s"dsirWeights left ${left.size} persisted RDDs")
+    assert(out.count() == 30L)
+  }
+
   test("connectedComponents driver path is self-contained") {
     import spark.implicits._
     val edges = Seq((1L, 2L), (2L, 3L), (10L, 11L)).toDF("a", "b")

@@ -140,6 +140,14 @@ class CarveTailSpec extends AnyFunSuite {
     val x = xz()
     throughTerminator(new XzCarver(0, 0), x.take(12), x.takeRight(12), searchFrom = 12)
   }
+  test("a footerless xz reports the bound it met: the evidence end or max_size") {
+    val header = xz().take(12)
+    def carve(evidenceLen: Int) =
+      carveWith(new InMemoryEvidence(header ++ new Array[Byte](evidenceLen - 12)), new XzCarver(1000, 0), 0, "p")
+        .map(c => (c.size, c.validated, c.truncated, c.errors))
+    assert(carve(200) == Some((200L, false, true, Seq("eof before xz end"))))
+    assert(carve(3000) == Some((1000L, false, true, Seq("max_size reached before xz end"))))
+  }
   test("gzip next-member magic split across the search's read boundary") {
     val header = gzip(0)
     acrossBoundary(new GzipCarver(0, 0), header.length, searchFrom = header.length, termLen = 3) { fill =>

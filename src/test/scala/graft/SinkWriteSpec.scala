@@ -201,4 +201,15 @@ class SinkWriteSpec extends AnyFunSuite with BeforeAndAfterAll with Eventually {
     assert(onePayloads == one.map(_._2) && fourPayloads == four.map(_._2),
       s"payloads $onePayloads / $fourPayloads for carves $one")
   }
+
+  test("Carve.runJob leaves no persisted dataset behind") {
+    SparkSession.getActiveSession.foreach(_.stop())
+    SparkSession.getDefaultSession.foreach(_.stop())
+    val out = Files.createTempDirectory("graft-sink-release")
+    Carve.runJob(Array(fixtureImage.toString, out.toString, config(1 << 20)),
+      Map("GRAFT_RUN_ID" -> "release"), stopSession = false)
+    val left = SparkSession.active.sparkContext.getPersistentRDDs
+    assert(left.isEmpty, s"persisted after the run: ${left.values.map(_.name).mkString(", ")}")
+    assert(spark.read.parquet(out.resolve("browser_history").toString).count() > 0)
+  }
 }

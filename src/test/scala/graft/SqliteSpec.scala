@@ -1,14 +1,47 @@
 package graft
 
+import graft.carve.EngineConfig
+import graft.evidence.{EvidenceReader, EvidenceRef, InMemoryRef}
+import graft.pipeline.CarvePipeline
 import graft.sqlite._
+import org.apache.spark.sql.SparkSession
+import org.scalatest.BeforeAndAfterAll
 import org.scalatest.funsuite.AnyFunSuite
+
+/** Counts, across the tasks of this JVM, the bytes its readers return. */
+final case class CountingRef(inner: EvidenceRef) extends EvidenceRef {
+  override def open(): EvidenceReader = new EvidenceReader {
+    private val reader = inner.open()
+    override def length: Long = reader.length
+    override def readAt(offset: Long, buf: Array[Byte], bufOff: Int, len: Int): Int = {
+      val n = reader.readAt(offset, buf, bufOff, len)
+      CountingRef.bytes.addAndGet(math.max(n, 0).toLong)
+      n
+    }
+    override def close(): Unit = reader.close()
+  }
+}
+
+object CountingRef {
+  val bytes = new java.util.concurrent.atomic.AtomicLong
+}
 
 /** Pure-Scala SQLite reader + browser extraction against real SQLite
   * files generated by the reference engine (tools/gen_sqlite_fixtures.py;
   * deterministic formula contents, 512-byte pages with multi-page b-trees
   * and an overflow-chain case).
   */
-class SqliteSpec extends AnyFunSuite {
+class SqliteSpec extends AnyFunSuite with BeforeAndAfterAll {
+
+  private lazy val spark = SparkSession.builder()
+    .master("local[4]")
+    .appName("graft-sqlite-test")
+    .config("spark.sql.shuffle.partitions", "4")
+    .config("spark.ui.enabled", "false")
+    .config("spark.sql.session.timeZone", "UTC")
+    .getOrCreate()
+
+  override def afterAll(): Unit = spark.stop()
 
   private def fixtureBytes(name: String): Array[Byte] = {
     val in = getClass.getResourceAsStream(s"/fixtures/$name")
@@ -285,5 +318,103 @@ class SqliteSpec extends AnyFunSuite {
     val (recs, viaPages) = WalkerSamples.allocatedBytes(SqlitePages.extractHistory(bytes, "r", "s"))
     assert(recs.nonEmpty)
     assert(viaPages < limit, s"page scan allocated $viaPages bytes")
+  }
+
+  // ---- the browser stage over carved databases, pinned per database ----
+
+  /** The planted databases: every fixture whole, one whose schema page is
+    * broken so no table parses (the page scan still finds its leaves),
+    * one whose downloads table is corrupt beside an intact history, and
+    * one whose history table is corrupt.
+    */
+  private lazy val planted: Seq[(String, Array[Byte])] = {
+    val headerOverrun = Corruptions.toMap.apply("header_overrun")
+    Fixtures.map(f => s"$f/whole" -> fixtureBytes(s"$f.sqlite")) ++ Seq(
+      "chrome_history/schema_broken" -> {
+        val b = fixtureBytes("chrome_history.sqlite"); java.util.Arrays.fill(b, 100, 120, 0.toByte); b
+      },
+      "chrome_history/header_overrun" -> headerOverrun(fixtureBytes("chrome_history.sqlite")),
+      "firefox_places/header_overrun" -> headerOverrun(fixtureBytes("firefox_places.sqlite")))
+  }
+
+  /** One 8 KiB slot per planted database, the carved set over it and the
+    * planted name of each carve's path.
+    */
+  private lazy val carvedImage = {
+    val slot = 8192
+    val image = new Array[Byte](slot * planted.length)
+    planted.zipWithIndex.foreach { case ((_, b), i) => System.arraycopy(b, 0, image, i * slot, b.length) }
+    val (cfg0, _) = EngineConfig.filterFileTypes(
+      EngineConfig(chunkSize = 128 * 1024, overlap = 8192), Some(Seq("sqlite")), disableZip = false)
+    val cfg = cfg0.copy(fileTypes = cfg0.fileTypes.map(_.copy(minSize = 0)))
+    val ref = InMemoryRef(image)
+    val carved = CarvePipeline.run(spark, ref, cfg, "pin", enableStrings = false, enableEntropy = false)
+      .carvedFiles
+    val names = carved.collect().map(c => c.path -> planted((c.globalStart / slot).toInt)._1).toMap
+    (ref, carved, names)
+  }
+
+  /** Per database: count:digest of history with page recovery off (h) and
+    * on (H), cookies (c) and downloads (d); then the whole timeline. Only
+    * page recovery yields rows from the database whose schema is broken.
+    */
+  private val BrowserPinned: Map[String, String] = Map(
+    "chrome_cookies/whole" -> "h0:e3b0c44298 H0:e3b0c44298 c20:209e531fdd d0:e3b0c44298",
+    "chrome_history/header_overrun" -> "h20:d65e87ce4d H20:d65e87ce4d c0:e3b0c44298 d0:e3b0c44298",
+    "chrome_history/schema_broken" -> "h0:e3b0c44298 H34:b49061f7ce c0:e3b0c44298 d0:e3b0c44298",
+    "chrome_history/whole" -> "h20:ec4f93b041 H20:ec4f93b041 c0:e3b0c44298 d10:e287c9998b",
+    "firefox_cookies/whole" -> "h0:e3b0c44298 H0:e3b0c44298 c20:e8b0e3ec9b d0:e3b0c44298",
+    "firefox_downloads/whole" -> "h0:e3b0c44298 H10:7d190ba389 c0:e3b0c44298 d10:a896372223",
+    "firefox_places/header_overrun" -> "h0:e3b0c44298 H19:5332343a06 c0:e3b0c44298 d0:e3b0c44298",
+    "firefox_places/whole" -> "h20:7767e8bdbf H20:7767e8bdbf c0:e3b0c44298 d0:e3b0c44298",
+    "overflow/whole" -> "h0:e3b0c44298 H0:e3b0c44298 c0:e3b0c44298 d0:e3b0c44298",
+    "timeline" -> "120:be102522d7")
+
+  test("the browser stage gives the pinned output for every carved database") {
+    val (ref, carved, names) = carvedImage
+    assert(names.size == planted.length, s"carved ${names.values.toSeq.sorted}")
+    def perDb[T <: Product](tag: String, recs: Seq[T])(source: T => String): Map[String, String] = {
+      val bySource = recs.groupBy(source)
+      names.map { case (path, name) => name -> s"$tag${digest(bySource.getOrElse(path, Nil).sortBy(canon))}" }
+    }
+    val families = Seq(
+      perDb("h", SqliteArtefacts.history(spark, ref, carved, "pin").collect().toSeq)(_.sourceFile),
+      perDb("H", SqliteArtefacts.history(spark, ref, carved, "pin", pageRecovery = true).collect().toSeq)(
+        _.sourceFile),
+      perDb("c", SqliteArtefacts.cookies(spark, ref, carved, "pin").collect().toSeq)(_.sourceFile),
+      perDb("d", SqliteArtefacts.downloads(spark, ref, carved, "pin").collect().toSeq)(_.sourceFile))
+    val timeline = SqliteArtefacts.timeline(spark, ref, carved, "pin").collect().map { r =>
+      val t = r.getTimestamp(0)
+      s"${t.getTime}.${t.getNanos}|${r.getString(1)}|${r.getString(2)}|${r.getString(3)}"
+    }.sorted
+    val seen = names.values.map(n => n -> families.map(_(n)).mkString(" ")).toSeq :+
+      ("timeline" -> s"${timeline.length}:${graft.fixtures.FixtureBytes.sha256Hex(
+        timeline.mkString("\n").getBytes("UTF-8")).take(10)}")
+    val wrong = seen.sorted.filterNot { case (k, v) => BrowserPinned.get(k).contains(v) }
+    assert(wrong.isEmpty, wrong.map { case (k, v) => s"\n    \"$k\" -> \"$v\"," }.mkString)
+  }
+
+  test("each carved database is read from the evidence once per browser pass") {
+    import spark.implicits._
+    val (ref, carved, names) = carvedImage
+    val total = carved.collect().filter(_.fileType == "sqlite").map(_.size).sum
+    assert(names.size == planted.length && total > 0)
+    def bytesRead(run: EvidenceRef => Unit): Long = {
+      CountingRef.bytes.set(0)
+      run(CountingRef(ref))
+      CountingRef.bytes.get
+    }
+    // the three browser streams as Carve.runJob builds them: projections
+    // of one persisted pass
+    val streams = bytesRead { counted =>
+      val dbs = SqliteArtefacts.records(counted, carved, "pin")
+        .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
+      try Seq(dbs.flatMap(_.history).collect(), dbs.flatMap(_.cookies).collect(),
+        dbs.flatMap(_.downloads).collect())
+      finally dbs.unpersist()
+    }
+    assert(streams == total, s"the browser streams read $streams bytes of $total")
+    val timeline = bytesRead(counted => SqliteArtefacts.timeline(spark, counted, carved, "pin").collect())
+    assert(timeline == total, s"the timeline read $timeline bytes of $total")
   }
 }
